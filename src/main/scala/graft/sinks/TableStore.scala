@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * re-expressed over parquet table directories.
   *
   * There is no Delta in the offline jar set (SURVEY §7.6), so MERGE is
-  * implemented over a KEY-BUCKETED layout: a table is a directory of
+  * implemented over ONE layout, used by every table: a directory of
   * `bNNNN` bucket subdirectories (bucket = pmod(hash(key), N), N recorded
   * in a `_graft_buckets` marker at creation). An upsert rewrites ONLY the
   * buckets containing batch keys — an upsert of a 10k-row batch into a
@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * TableStoreSpec). At 1000-executor scale bucket count is sized so a
   * bucket is a few GB; the merge job for all affected buckets is ONE
   * Spark job (partitionBy on the bucket id), not a per-bucket loop.
+  * `append` keeps the same layout with N = 1: its rows land in `b0000`,
+  * so upsert, lookup and deleteCascade work on appended tables unchanged
+  * (pmod(hash, 1) = 0).
   *
   * Writes are crash-safe per bucket: new data lands in a staging dir,
   * then live→.bak, staging→live, drop .bak — a failure at any step
@@ -27,7 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * All operations are idempotent: re-running an upsert of the same batch
   * yields an identical table (the OP-61 at-least-once retry model stays
-  * exactly-once-effective).
+  * exactly-once-effective), and an empty input is a no-op that writes
+  * nothing, so callers need no emptiness guard of their own.
   */
 object TableStore {
 
@@ -45,11 +49,6 @@ object TableStore {
       .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
       .sortBy(_.getName)
 
-  /** Loose files at the table root — the flat layout `append` writes. */
-  private def flatFiles(path: String): Seq[File] =
-    Option(new File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-
   /** Declared bucket count of an existing bucketed table, if any. Read
     * from the marker, NOT from the number of bucket dirs present — empty
     * buckets have no directory, and merging with the wrong modulus would
@@ -63,9 +62,8 @@ object TableStore {
 
   private def bucketExpr(key: String, n: Int): Column = pmod(hash(col(key)), lit(n))
 
-  /** Swap-in-progress marker for multi-step rewrites: present => the
-    * staged data is authoritative (roll FORWARD on recovery); absent
-    * with a backup present => the rewrite hadn't committed (roll BACK).
+  /** Swap-in-progress marker of an upsert: present => the staged
+    * buckets are authoritative (roll FORWARD on recovery).
     */
   private val SwapMarker = "_graft_swap"
 
@@ -75,10 +73,8 @@ object TableStore {
     *    bucket in `.bak`, which no read path consults — restore it
     *    (promote never happened) or drop it (live exists => promote
     *    completed, only the cleanup was lost);
-    *  - an interrupted flat-file rewrite: with the [[SwapMarker]]
-    *    present the staged survivors are authoritative — finish moving
-    *    them in and drop the backup; without it the old files are —
-    *    restore them from `.flatbak` and drop the staging dir.
+    *  - an interrupted upsert swap: with the [[SwapMarker]] present,
+    *    promote the remaining staged buckets and drop the staging dir.
     */
   private def recover(path: String): Unit = {
     Option(new File(path).listFiles()).toSeq.flatten
@@ -89,46 +85,23 @@ object TableStore {
         else require(bak.renameTo(live), s"recover: restore failed for $bak")
       }
     val marker = new File(path, SwapMarker)
-    val flatbak = new File(path + ".flatbak")
-    val flatStaging = new File(path + ".flatstaging")
     if (marker.exists()) {
-      // staged data is authoritative: complete the interrupted swap —
-      // promote remaining staged bucket parts (upsert) and remaining
-      // staged flat files (flat rewrite) — then drop the backups
-      val bucketStaging = new File(path + ".staging")
-      Option(bucketStaging.listFiles()).toSeq.flatten
+      val staging = new File(path + ".staging")
+      Option(staging.listFiles()).toSeq.flatten
         .filter(d => d.isDirectory && d.getName.startsWith("__b="))
         .foreach { part =>
           val b = part.getName.stripPrefix("__b=").toInt
           swapIn(part, new File(path, bucketName(b)))
         }
-      deleteRec(bucketStaging)
-      Option(flatStaging.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        .foreach(f => require(f.renameTo(new File(path, f.getName)),
-          s"recover: promote failed for $f"))
-      deleteRec(flatStaging); deleteRec(flatbak)
+      deleteRec(staging)
       val _ = marker.delete()
-    } else if (flatbak.exists()) {
-      // rewrite never committed: the old files are authoritative
-      Option(flatbak.listFiles()).toSeq.flatten.foreach { f =>
-        val back = new File(path, f.getName)
-        if (!back.exists())
-          require(f.renameTo(back), s"recover: rollback failed for $f")
-      }
-      deleteRec(flatbak); deleteRec(flatStaging)
-    } else if (flatStaging.exists()) deleteRec(flatStaging)
+    }
   }
 
-  /** Read a table in either layout (bucket dirs, flat files, or both —
-    * `append` may add flat files to a bucketed table; `upsert` folds them
-    * into buckets on its next run). Flat files are addressed by explicit
-    * file path: a directory listing that mixes loose files with
-    * non-partition subdirectories is ill-defined for Spark's file index.
-    */
+  /** Read a table: every bucket dir, or None if the table has none. */
   def read(spark: SparkSession, path: String): Option[DataFrame] = {
     recover(path)
-    val parts = bucketDirs(path).map(_.getPath) ++ flatFiles(path).map(_.getPath)
+    val parts = bucketDirs(path).map(_.getPath)
     if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
   }
 
@@ -148,13 +121,6 @@ object TableStore {
     if (bak.exists()) deleteRec(bak)
   }
 
-  /** Atomic replace of the table/bucket dir at `path` with `df`. */
-  private def replace(df: DataFrame, path: String): Unit = {
-    val staging = path + ".staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    swapIn(new File(staging), new File(path))
-  }
-
   /** Deterministic batch-internal dedup, keep-LAST: the reference sends
     * chunks sequentially and its later chunk wins (UPSERT ... ON CONFLICT
     * DO UPDATE, supabase_repository.py:59-65). With no ingest-order
@@ -169,10 +135,6 @@ object TableStore {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** OP-11: bulk upsert — new rows win on key collision. Only buckets
-    * containing batch keys are rewritten; a legacy flat layout (from
-    * `append`) is folded into buckets on the way through.
-    */
   /** Working column names the store claims for itself: a user column
     * with one of these names would be silently overwritten (and, for
     * __b, stripped by partitionBy) — refuse up front instead.
@@ -184,24 +146,36 @@ object TableStore {
       s"$op: column name(s) ${clash.mkString(", ")} are reserved by TableStore")
   }
 
+  /** Creates the table dir and its bucket-count marker if absent. Runs
+    * BEFORE any bucket lands: a crash after buckets land but before the
+    * marker would let a later upsert merge with a different default
+    * modulus and silently duplicate keys.
+    */
+  private def declare(path: String, n: Int): Unit = {
+    val marker = new File(path, BucketMarker)
+    if (!marker.exists()) {
+      new File(path).mkdirs()
+      val _ = java.nio.file.Files.write(marker.toPath, n.toString.getBytes("UTF-8"))
+    }
+  }
+
+  /** OP-11: bulk upsert — new rows win on key collision. Only buckets
+    * containing batch keys are rewritten.
+    */
   def upsert(batch: DataFrame, path: String, key: String,
              numBuckets: Int = DefaultBuckets): Unit = {
     val spark = batch.sparkSession
     requireUnreserved(batch, "upsert")
+    val deduped = dedupeKeepLast(batch, key).localCheckpoint(true)
+    if (deduped.isEmpty) return
     recover(path)
     val n = declaredBuckets(path).getOrElse(numBuckets)
-    val deduped = dedupeKeepLast(batch, key).localCheckpoint(true)
     val withB = deduped.withColumn("__b", bucketExpr(key, n))
+    val affected = withB.select("__b").distinct().collect().map(_.getInt(0)).toSeq.sorted
 
-    val flat = flatFiles(path)
-    val affected: Seq[Int] =
-      if (flat.nonEmpty) (0 until n) // folding flat files touches all buckets
-      else withB.select("__b").distinct().collect().map(_.getInt(0)).toSeq.sorted
-
-    // existing rows of the affected buckets (+ any flat files), batch keys removed
+    // existing rows of the affected buckets, batch keys removed
     val existingParts =
-      affected.map(b => new File(path, bucketName(b))).filter(_.exists()).map(_.getPath) ++
-        flat.map(_.getPath)
+      affected.map(b => new File(path, bucketName(b))).filter(_.exists()).map(_.getPath)
     // null-safe key equality: with plain ===, an existing null-key row
     // never matches the anti-join and a new null-key row is APPENDED on
     // every upsert — unbounded duplicates instead of replacement
@@ -212,27 +186,13 @@ object TableStore {
         .withColumn("__b", bucketExpr(key, n))
 
     // ONE job writes every affected bucket via partitionBy, then each
-    // bucket dir is swapped in individually (crash-safe per bucket).
+    // bucket dir is swapped in individually (crash-safe per bucket);
+    // the swap marker makes recovery roll forward from here on
     val staging = new File(path + ".staging")
     if (staging.exists()) deleteRec(staging)
     keep.unionByName(withB)
       .write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(staging.getPath)
-    new File(path).mkdirs()
-    // the bucket-count marker is written BEFORE any swap: a crash after
-    // buckets land but before the marker would let a later upsert merge
-    // with a different default modulus and silently duplicate keys
-    java.nio.file.Files.write(new File(path, BucketMarker).toPath,
-      n.toString.getBytes("UTF-8"))
-    // flat files being folded move to a recoverable backup BEFORE the
-    // swaps (a crash mid-fold must not leave their rows both in the new
-    // buckets and still loose, which no later run would dedup); the
-    // swap marker makes recovery roll forward from here on
-    val flatbak = new File(path + ".flatbak")
-    if (flat.nonEmpty) {
-      flatbak.mkdirs()
-      flat.foreach(f => require(f.renameTo(new File(flatbak, f.getName)),
-        s"upsert: flat backup failed for $f"))
-    }
+    declare(path, n)
     java.nio.file.Files.write(new File(path, SwapMarker).toPath, Array.emptyByteArray)
     affected.foreach { b =>
       val part = new File(staging, s"__b=$b")
@@ -243,54 +203,62 @@ object TableStore {
       }
     }
     deleteRec(staging)
-    if (flatbak.exists()) deleteRec(flatbak)
     val _ = new File(path, SwapMarker).delete()
   }
 
   /** OP-08 at scale: point lookup by the table's bucket key. Reads ONE
-    * bucket directory — the one `pmod(hash(value), n)` selects — plus
-    * any not-yet-folded flat files, instead of scanning the table: on a
-    * thousand-bucket production table this is a thousandth of the IO.
-    * The hash is evaluated through the same Catalyst expression the
-    * writer used, so reader and writer can never disagree.
+    * bucket directory — the one `pmod(hash(value), n)` selects — instead
+    * of scanning the table: on a thousand-bucket production table this
+    * is a thousandth of the IO. The hash is evaluated through the same
+    * Catalyst expression the writer used, so reader and writer can never
+    * disagree.
     */
   def lookup(spark: SparkSession, path: String, key: String, value: Any): Option[DataFrame] = {
     read(spark, path).map { whole =>
+      // cast the literal to the key's table type before hashing:
+      // hash(int 42) != hash(long 42), and a width mismatch would
+      // silently probe the wrong bucket
+      val lv = lit(value).cast(whole.schema(key).dataType)
       declaredBuckets(path) match {
         case Some(n) =>
-          // cast the literal to the key's table type before hashing:
-          // hash(int 42) != hash(long 42), and a width mismatch would
-          // silently probe the wrong bucket
-          val lv = lit(value).cast(whole.schema(key).dataType)
           val b = spark.range(1)
             .select(pmod(hash(lv), lit(n)).as("b"))
             .head().getInt(0)
-          val parts = Seq(new File(path, bucketName(b))).filter(_.exists()).map(_.getPath) ++
-            flatFiles(path).map(_.getPath)
-          if (parts.isEmpty) whole.limit(0)
-          else spark.read.parquet(parts: _*).filter(col(key) === lv)
-        case None => whole.filter(col(key) === lit(value))
+          val part = new File(path, bucketName(b))
+          if (part.exists()) spark.read.parquet(part.getPath).filter(col(key) === lv)
+          else whole.limit(0)
+        case None => whole.filter(col(key) === lv)
       }
     }
   }
 
-  /** OP-12 + OP-44: append-only chunked insert. `chunkRows` bounds rows
+  /** OP-12 + OP-44: append-only chunked insert into a one-bucket table
+    * (created on first use): rows land in `b0000`, so the table stays in
+    * the one layout every other operation reads. `chunkRows` bounds rows
     * per output file (the reference's DB_BULK_SIZE=500 write batching,
-    * supabase_repository.py:67-71 + constants.py:56); 0 = no bound.
+    * supabase_repository.py:67-71 + constants.py:56); 0 = no bound. A
+    * table declared with more buckets is refused: unbucketed rows there
+    * would break the key-to-bucket invariant upsert and lookup rely on.
+    * The empty check evaluates `batch` once more — pass a materialized
+    * frame when it is costly to compute.
     */
   def append(batch: DataFrame, path: String, chunkRows: Int = 0): Unit = {
     requireUnreserved(batch, "append")
+    recover(path)
+    declaredBuckets(path).foreach(n => require(n == 1,
+      s"append: $path is declared with $n buckets; append extends one-bucket tables only"))
+    if (batch.isEmpty) return
+    declare(path, 1)
     val w = if (chunkRows > 0)
       batch.write.option("maxRecordsPerFile", chunkRows.toLong)
     else batch.write
-    w.mode(SaveMode.Append).parquet(path)
+    w.mode(SaveMode.Append).parquet(new File(path, bucketName(0)).getPath)
   }
 
   /** OP-13 + OP-29: delete parent rows by key with explicit cascade to
     * child tables (Spark has no FK cascades — each child is rewritten
-    * with an anti-join on its FK). On bucketed tables only buckets that
-    * actually contain matching rows are rewritten; the rest keep their
-    * files untouched.
+    * with an anti-join on its FK). Only buckets that actually contain
+    * matching rows are rewritten; the rest keep their files untouched.
     *
     * The delete key is often NOT the table's bucket key (record is
     * bucketed by nca_number but cascaded on release_id), so affected
@@ -308,6 +276,7 @@ object TableStore {
     // very tables being rewritten — without materialization, the second
     // table's anti-join would recompute keys against already-swapped files
     val k = keys.select(col(keyCol).as("__k")).distinct().localCheckpoint(true)
+    if (k.isEmpty) return
     // CHILDREN FIRST (reverse FK order, like SQL cascades): a crash
     // between tables then leaves the parent row in place, so the
     // caller's retry re-detects the condition and re-runs the cascade.
@@ -340,35 +309,6 @@ object TableStore {
             else if (live.exists()) deleteRec(live) // bucket fully deleted
           }
           deleteRec(staging)
-        }
-      }
-      // flat files (append layout): rewrite the file set without touching
-      // any sibling bucket dirs. Crash-safe via the recover() protocol:
-      // survivors staged first, old files moved to a restorable backup,
-      // THEN the swap marker commits the rewrite — at no point is the
-      // only copy of a surviving row deletable
-      val flat = flatFiles(path)
-      if (flat.nonEmpty) {
-        val t = spark.read.parquet(flat.map(_.getPath): _*)
-        val hasHits = !t.join(broadcast(k), col(fk) === col("__k"), "left_semi").isEmpty
-        if (hasHits) {
-          val staging = new File(path + ".flatstaging")
-          if (staging.exists()) deleteRec(staging)
-          t.join(broadcast(k), col(fk) === col("__k"), "left_anti")
-            .write.parquet(staging.getPath)
-          val flatbak = new File(path + ".flatbak")
-          flatbak.mkdirs()
-          flat.foreach(f => require(f.renameTo(new File(flatbak, f.getName)),
-            s"flat rewrite: backup failed for $f"))
-          java.nio.file.Files.write(new File(path, SwapMarker).toPath,
-            Array.emptyByteArray)
-          Option(staging.listFiles()).toSeq.flatten
-            .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-            .foreach(f => require(f.renameTo(new File(path, f.getName)),
-              s"flat rewrite: move failed for $f"))
-          deleteRec(staging)
-          deleteRec(flatbak)
-          val _ = new File(path, SwapMarker).delete()
         }
       }
     }

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.StructType
+import graft.CheckpointBlocks
 import graft.operators.{Batcher, ChangeDetector, CoLocatedJoin, NcaCleaner}
 import graft.sinks.TableStore
 import graft.sources.{BlobFetcher, HtmlLinkSource, PdfTableSource}
@@ -82,23 +85,20 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
     val changed = proceed
       .filter(col("change_status").isin("changed", "missing_file"))
       .select("id")
-    if (!changed.isEmpty) {
-      // reference deletes stale rows then re-inserts (releases_scraper.py:119);
-      // the schema cascade is TWO levels (supabase_schema.sql:29,40):
-      // release -> record (by release_id) -> allocation (by nca_number).
-      // Collect the doomed records' nca_numbers BEFORE deleting them.
-      val deadNcas = TableStore.read(spark, recordTable).map(
-        _.join(broadcast(changed.select(col("id").as("__rid"))),
-            col("release_id") === col("__rid"), "left_semi")
-          .select("nca_number").localCheckpoint(true))
-      deadNcas.filter(!_.isEmpty).foreach { k =>
-        TableStore.deleteCascade(spark, k, "nca_number",
-          parent = (allocationTable, "nca_number"))
-      }
-      TableStore.deleteCascade(spark, changed, "id",
-        parent = (releaseTable, "id"),
-        children = Seq((recordTable, "release_id")))
+    // reference deletes stale rows then re-inserts (releases_scraper.py:119);
+    // the schema cascade is TWO levels (supabase_schema.sql:29,40):
+    // release -> record (by release_id) -> allocation (by nca_number).
+    // The doomed records' nca_numbers are materialized (inside
+    // deleteCascade) BEFORE the records themselves are deleted.
+    TableStore.read(spark, recordTable).foreach { recs =>
+      val deadNcas = recs.join(broadcast(changed.select(col("id").as("__rid"))),
+        col("release_id") === col("__rid"), "left_semi")
+      TableStore.deleteCascade(spark, deadNcas, "nca_number",
+        parent = (allocationTable, "nca_number"))
     }
+    TableStore.deleteCascade(spark, changed, "id",
+      parent = (releaseTable, "id"),
+      children = Seq((recordTable, "release_id")))
     val toQueue = proceed.drop("change_status")
     if (!toQueue.isEmpty) {
       QueuePipeline.enqueue(toQueue, releaseQueue)
@@ -183,80 +183,56 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
     * distributed cleaner pass, and load records (upsert) + allocations
     * (append).
     *
-    * Fully distributed — no driver loop: batch rows join their blobs
-    * (small side broadcast), extraction runs per-partition on executors,
-    * and the cleaner partitions by a (release, batch) key exactly as the
-    * reference cleans per-batch (worker.py:69-94: each batch's first
-    * extracted row is consumed as that batch's header — real PDFs repeat
-    * the header on every page).
+    * Fully distributed — no driver loop: each batch row reads its blob
+    * on an executor, and the cleaner partitions by a (release, batch)
+    * key exactly as the reference cleans per-batch (worker.py:69-94:
+    * each batch's first extracted row is consumed as that batch's
+    * header — real PDFs repeat the header on every page). The extracted
+    * grid and the allocations are materialized once per micro-batch, so
+    * every batch is extracted once and cleaned once per output.
     */
   def work(blobDir: String,
            extractor: PdfTableSource.TableExtractor = PdfTableSource.StubPdfFormat): Long =
     QueuePipeline.runStage(spark, batchQueue, batchSchema,
         p("checkpoints", "worker"), quarantine) { batches =>
       import spark.implicits._
-      // doc identity downstream is the BASENAME (candidates carry
-      // filenames, not paths): two same-named blobs in different
-      // subdirectories would collapse into one doc and interleave their
-      // ord keys through the cleaner — refuse the ambiguity up front
-      locally {
-        // Hadoop FS, not java.io.File: on hdfs://, s3a:// etc. a local
-        // File walk silently finds nothing and the guard would no-op —
-        // while readBlobs happily reads both same-named blobs
-        val path = new org.apache.hadoop.fs.Path(blobDir)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) {
-          val names = Seq.newBuilder[String]
-          val it = fs.listFiles(path, true)
-          while (it.hasNext) names += it.next().getPath.getName
-          val dups = names.result().groupBy(identity)
-            .filter(_._2.size > 1).keys.toSeq.sorted
-          if (dups.nonEmpty)
-            throw new java.io.IOException(
-              s"ambiguous blob basenames in $blobDir: ${dups.mkString(", ")}")
-        }
-      }
-      val blobs = PdfTableSource.readBlobs(spark, blobDir)
-        .select(element_at(split(col("path"), "/"), -1).as("filename"),
-          col("content"))
-      val batchCols = batches.select(
-        col("release.filename").as("filename"),
-        col("release.id").as("release_id"),
+      val tasks = batches.select(
+        col("release.filename"), col("release.id"),
         col("batch_number"), col("start_page_num"), col("end_page_num"))
+        .as[(String, String, Int, Int, Int)]
       // a batch whose blob is MISSING must fail (-> per-message
-      // quarantine), not silently drop out of an inner join with its
-      // queue message checkpointed as processed — the reference worker
-      // raises and dead-letters exactly this case
-      val missing = batchCols.join(blobs, Seq("filename"), "left_anti")
-        .select("filename").distinct().as[String].collect()
+      // quarantine), not silently yield no rows with its queue message
+      // checkpointed as processed — the reference worker raises and
+      // dead-letters exactly this case. Blobs are the regular files
+      // directly in blobDir, by name: the set saveBlobs writes and
+      // listBlobs (CDC) probes, so a name with a separator is never one
+      // (nor may it escape blobDir). Spark's file sources would hide
+      // names starting with `_` or `.`, which CDC then classifies
+      // unchanged and never retries.
+      val missing = tasks.map(_._1).distinct().collect().filter(f =>
+        f.contains('/') || f.contains('\\') || !new File(blobDir, f).isFile)
       if (missing.nonEmpty)
         throw new java.io.IOException(
           s"blob missing for queued batch(es): ${missing.sorted.mkString(", ")}")
-      val tasks = batchCols
-        .join(blobs, Seq("filename"))
-        .select(col("release_id"), col("batch_number"),
-          col("start_page_num"), col("end_page_num"), col("content"))
-        .as[(String, Int, Int, Int, Array[Byte])]
       // doc key = releaseId + U+0001 + batch: per-batch cleaner isolation;
       // release id is recovered from the key after cleaning.
-      val grid = tasks.mapPartitions(_.flatMap { case (rid, bn, s, e, bytes) =>
+      val grid = tasks.mapPartitions(_.flatMap { case (fn, rid, bn, s, e) =>
+          val bytes = Files.readAllBytes(new File(blobDir, fn).toPath)
           extractor.extract(s"$rid\u0001$bn", bytes, s, e)
-        }).toDF().select(col("doc"), col("ord"), col("cells"))
+        }).toDF().select(col("doc"), col("ord"), col("cells")).localCheckpoint(true)
       val cleaned = NcaCleaner.clean(grid,
         element_at(split(col("doc"), "\u0001"), 1))
-      val records = cleaned.records.drop("doc")
-      if (!records.isEmpty) TableStore.upsert(records, recordTable, "nca_number")
+      TableStore.upsert(cleaned.records.drop("doc"), recordTable, "nca_number")
       // Allocations keep their (release, batch) provenance key so the
       // load is idempotent under at-least-once replay: delete-by-key
       // then append — a redelivered batch replaces its own rows and
       // never duplicates them (reference plain bulk-insert would).
       val allocations = cleaned.allocations.withColumnRenamed("doc", "__batch_key")
-      if (!allocations.isEmpty) {
-        val keys = allocations.select("__batch_key").distinct().localCheckpoint(true)
-        TableStore.deleteCascade(spark, keys, "__batch_key",
-          parent = (allocationTable, "__batch_key"))
-        TableStore.append(allocations, allocationTable, chunkRows = 500)
-      }
+        .localCheckpoint(true)
+      TableStore.deleteCascade(spark, allocations, "__batch_key",
+        parent = (allocationTable, "__batch_key"))
+      TableStore.append(allocations, allocationTable, chunkRows = 500)
+      Seq(grid, allocations).foreach(CheckpointBlocks.release)
     }
 
   def records: Option[DataFrame] = TableStore.read(spark, recordTable)

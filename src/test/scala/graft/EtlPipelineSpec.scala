@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sinks.TableStore
+import graft.sources.PdfTableSource
 import graft.sources.PdfTableSource.StubPdfFormat
 import graft.streaming.EtlPipeline
 
@@ -544,6 +548,76 @@ class EtlPipelineSpec extends SparkSpecBase {
       "the /Differences-remapped byte must survive into allocations")
   }
 
+  test("a release whose filename starts with '_' loads its records") {
+    import graft.sources.BlobFetcher
+    val workDir = Files.createTempDirectory("etlunderscore").toString
+    val blobDir = s"$workDir/blobs"
+    // the filename is the URL's last path segment, so any name can arrive
+    writeBlob(blobDir, "_NCA_2024.pdf", Seq(page(
+      Seq("NCA-U", "Regular", "2024-07-01", "DOLE", "AgU", "OU9", "90.00", "Jobs"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 10)
+    val candidates = Seq(("id_u", "NCA 2024", "_NCA_2024.pdf", "https://x/_NCA_2024.pdf",
+      2024, 1, Some("c"), Some("m"))
+    ).toDF("id", "title", "filename", "url", "year", "page_count",
+      "file_meta_created_at", "file_meta_modified_at")
+    // CDC probes the stored-blob listing the worker must then read
+    assert(pipe.scrape(candidates, BlobFetcher.listBlobs(spark, blobDir)).count() === 1)
+    pipe.orchestrate(); pipe.work(blobDir)
+    assert(!Files.exists(Paths.get(pipe.quarantine)), "the batch must not dead-letter")
+    assert(pipe.records.get.select("nca_number", "release_id")
+      .as[(String, String)].collect().toSeq === Seq(("NCA-U", "id_u")))
+    assert(pipe.allocations.get.count() === 1)
+    // the stored file and db row agree, so the release is current
+    assert(pipe.scrape(candidates, BlobFetcher.listBlobs(spark, blobDir)).isEmpty)
+  }
+
+  test("a batch whose filename leaves the blob directory quarantines") {
+    val workDir = Files.createTempDirectory("etlescape").toString
+    val blobDir = s"$workDir/blobs"
+    Files.createDirectories(Paths.get(blobDir))
+    // a readable document one level up: reading it would escape blobDir
+    writeBlob(workDir, "NCA_2024.pdf", Seq(page(
+      Seq("NCA-E", "Regular", "2024-01-01", "DBM", "AgE", "OU1", "10.00", "Out"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 10)
+    val candidates = Seq(("id_e", "NCA 2024", "../NCA_2024.pdf", "https://x/NCA_2024.pdf",
+      2024, 1, Some("c"), Some("m"))
+    ).toDF("id", "title", "filename", "url", "year", "page_count",
+      "file_meta_created_at", "file_meta_modified_at")
+    pipe.scrape(candidates, Seq.empty[String].toDF("filename"))
+    pipe.orchestrate(); pipe.work(blobDir)
+    assert(pipe.records.isEmpty)
+    assert(spark.read.text(pipe.quarantine).count() === 1)
+  }
+
+  test("work() extracts each queued batch exactly once") {
+    val workDir = Files.createTempDirectory("etlonce").toString
+    val blobDir = s"$workDir/blobs"
+    writeBlob(blobDir, "NCA_2023.pdf", Seq(
+      page(Seq("NCA-7", "Regular", "2023-07-01", "DA", "AgA", "OU1", "70.00", "Seeds")),
+      page(Seq("NCA-8", "Special", "2023-08-01", "DA", "AgB", "OU2", "80.00", "Tools"))))
+    writeBlob(blobDir, "NCA_2024.pdf", Seq(
+      page(Seq("NCA-9", "Regular", "2024-09-01", "DTI", "AgC", "OU3", "90.00", "Trade"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 1)
+    val candidates = Seq(
+      ("id_2023", "NCA 2023", "NCA_2023.pdf", "https://x/NCA_2023.pdf",
+        2023, 2, Some("c"), Some("m")),
+      ("id_2024", "NCA 2024", "NCA_2024.pdf", "https://x/NCA_2024.pdf",
+        2024, 1, Some("c"), Some("m"))
+    ).toDF("id", "title", "filename", "url", "year", "page_count",
+      "file_meta_created_at", "file_meta_modified_at")
+    pipe.scrape(candidates, Seq("NCA_2023.pdf", "NCA_2024.pdf").toDF("filename"))
+    pipe.orchestrate()
+    EtlCountingExtractor.calls.clear()
+    pipe.work(blobDir, EtlCountingExtractor)
+    assert(pipe.records.get.count() === 3)
+    assert(pipe.allocations.get.count() === 3)
+    def counts = EtlCountingExtractor.calls.asScala.map { case (k, v) => k -> v.get }.toMap
+    assert(counts === Map("id_2023\u00011" -> 1, "id_2023\u00012" -> 1, "id_2024\u00011" -> 1))
+    // a drained queue extracts nothing more
+    pipe.work(blobDir, EtlCountingExtractor)
+    assert(counts.values.toSet === Set(1))
+  }
+
   test("per-message isolation: one poison well-formed message quarantines, rest process") {
     import org.apache.spark.sql.types.StructType
     import graft.streaming.QueuePipeline
@@ -561,4 +635,17 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(out === Set(1, 3), "healthy messages must process")
     assert(spark.read.text(s"$workDir/quar").count() === 1, "poison must quarantine")
   }
+}
+
+/** The stub codec, counting `extract` calls per doc key. The counts are
+  * static so executor-side calls land in the same map.
+  */
+object EtlCountingExtractor extends PdfTableSource.TableExtractor {
+  val calls = new ConcurrentHashMap[String, AtomicInteger]()
+  def extract(doc: String, bytes: Array[Byte], startPage: Int, endPage: Int) = {
+    calls.computeIfAbsent(doc, _ => new AtomicInteger()).incrementAndGet()
+    StubPdfFormat.extract(doc, bytes, startPage, endPage)
+  }
+  def pageCount(bytes: Array[Byte]): Int = StubPdfFormat.pageCount(bytes)
+  def metadata(doc: String, bytes: Array[Byte]) = StubPdfFormat.metadata(doc, bytes)
 }

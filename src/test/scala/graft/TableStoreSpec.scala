@@ -2,6 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.sinks.TableStore
 
 class TableStoreSpec extends SparkSpecBase {
@@ -71,19 +72,20 @@ class TableStoreSpec extends SparkSpecBase {
     assert(all.size === 500 && all(42) === "UPDATED" && all(41) === "v41")
   }
 
-  /** bucket dir -> sorted (file name, size, md5) fingerprint. */
-  private def bucketFileState(dir: String): Map[String, Seq[(String, Long, String)]] =
-    new File(dir).listFiles().filter(f => f.isDirectory && f.getName.matches("b\\d{4}"))
-      .map { b =>
-        val files = b.listFiles().filter(_.isFile).sortBy(_.getName).toSeq
-          .map { f =>
-            val bytes = Files.readAllBytes(f.toPath)
-            val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-              .map("%02x".format(_)).mkString
-            (f.getName, f.length(), md5)
-          }
-        b.getName -> files
-      }.toMap
+  /** relative path -> (size, md5) of every file under a table dir. */
+  private def tableFileState(dir: String): Map[String, (Long, String)] = {
+    val root = new File(dir).toPath
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(Files.readAllBytes(f))
+        .map("%02x".format(_)).mkString
+      root.relativize(f).toString -> ((Files.size(f), md5))
+    }.toMap finally walk.close()
+  }
+
+  /** bucket dir -> the fingerprints of its files. */
+  private def bucketFileState(dir: String): Map[String, Map[String, (Long, String)]] =
+    tableFileState(dir).groupBy(_._1.split('/').head).filter(_._1.matches("b\\d{4}"))
 
   test("append accumulates; deleteCascade removes parent and child rows") {
     val base = Files.createTempDirectory("ts3").toString
@@ -131,21 +133,60 @@ class TableStoreSpec extends SparkSpecBase {
       .as[(Int, String)].collect().toSeq === Seq((42, "v42")))
   }
 
-  test("upsert folds a legacy flat append layout into buckets") {
+  test("append then upsert on the same table merges into its one bucket") {
     val dir = Files.createTempDirectory("ts6").toString + "/t"
     TableStore.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
+    TableStore.append(Seq((4, "d")).toDF("k", "v"), dir)
     TableStore.upsert(Seq((2, "B2"), (3, "c")).toDF("k", "v"), dir, "k")
     assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().toSet
-      === Set((1, "a"), (2, "B2"), (3, "c")))
-    // flat files are gone — the table is fully bucketed now
-    assert(!new File(dir).listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet")))
+      === Set((1, "a"), (2, "B2"), (3, "c"), (4, "d")))
+    // the append declared one bucket, and upsert keeps the declaration
+    assert(bucketFileState(dir).keySet === Set("b0000"))
+    assert(new String(Files.readAllBytes(new File(dir, "_graft_buckets").toPath)).trim === "1")
+    assert(TableStore.lookup(spark, dir, "k", 3).get
+      .as[(Int, String)].collect().toSeq === Seq((3, "c")))
+    // no loose files at the table root
+    assert(!new File(dir).listFiles().exists(f => f.isFile && !f.getName.startsWith("_")))
+  }
+
+  test("append into a multi-bucket table is refused") {
+    val dir = Files.createTempDirectory("ts8").toString + "/t"
+    TableStore.upsert((1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
+    val before = tableFileState(dir)
+    val e = intercept[IllegalArgumentException] {
+      TableStore.append(Seq((101, "x")).toDF("k", "v"), dir)
+    }
+    assert(e.getMessage.contains("16 buckets"))
+    assert(tableFileState(dir) === before)
+  }
+
+  test("empty upsert, deleteCascade and append write nothing") {
+    val base = Files.createTempDirectory("tsempty").toString
+    val bucketed = s"$base/bucketed"
+    val appended = s"$base/appended"
+    TableStore.upsert((1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), bucketed, "k")
+    TableStore.append((1 to 10).map(i => (i, s"v$i")).toDF("k", "v"), appended)
+    val empty = Seq.empty[(Int, String)].toDF("k", "v")
+    Seq(bucketed, appended).foreach { t =>
+      val before = tableFileState(t)
+      TableStore.upsert(empty, t, "k")
+      TableStore.deleteCascade(spark, empty, "k", parent = (t, "k"))
+      if (t == appended) TableStore.append(empty, t)
+      assert(tableFileState(t) === before, s"$t changed")
+    }
+    // on an absent table none of them creates anything
+    val absent = s"$base/absent"
+    TableStore.upsert(empty, absent, "k")
+    TableStore.deleteCascade(spark, empty, "k", parent = (absent, "k"))
+    TableStore.append(empty, absent, chunkRows = 500)
+    assert(!new File(absent).exists())
+    assert(new File(base).list().sorted.toSeq === Seq("appended", "bucketed"))
   }
 
   test("append chunkRows bounds rows per output file (OP-44, DB_BULK_SIZE analog)") {
     val dir = Files.createTempDirectory("ts7").toString + "/t"
     TableStore.append((1 to 1200).toDF("k").coalesce(1), dir, chunkRows = 500)
-    val files = new File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    val files = new File(dir, "b0000").listFiles().filter(_.getName.endsWith(".parquet"))
     val counts = files.map(f => spark.read.parquet(f.getPath).count()).sorted.toSeq
     assert(counts.forall(_ <= 500), s"file over chunk bound: $counts")
     assert(counts.sum === 1200)
@@ -166,48 +207,36 @@ class TableStoreSpec extends SparkSpecBase {
     assert(!bak.exists(), "backup must be promoted back to live")
   }
 
-  test("recover: interrupted flat rewrite rolls back without the swap marker") {
+  test("recover: an appended table's delete rewrite crashed before promote is restored") {
     val dir = Files.createTempDirectory("tsrec2").toString + "/t"
-    TableStore.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), dir)
-    // simulate a crash AFTER old files moved to backup, BEFORE the
-    // marker: old data must come back, staging must be discarded
-    val flat = new File(dir).listFiles().filter(f =>
-      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val bakDir = new File(dir + ".flatbak"); bakDir.mkdirs()
-    flat.foreach(f => assert(f.renameTo(new File(bakDir, f.getName))))
-    new File(dir + ".flatstaging").mkdirs()
-    assert(TableStore.read(spark, dir).get.count() === 3,
-      "rollback must restore the backed-up flat files")
-    assert(!bakDir.exists() && !new File(dir + ".flatstaging").exists())
+    TableStore.append((1 to 10).map(i => (i, s"v$i")).toDF("k", "v"), dir)
+    // simulate a crash inside deleteCascade's swap of b0000: the survivors
+    // are staged, the live bucket moved to its backup, promote never ran
+    val staging = dir + ".delstaging"
+    (1 to 10).filter(_ != 3).map(i => (i, s"v$i", 0)).toDF("k", "v", "__b")
+      .write.partitionBy("__b").parquet(staging)
+    val bak = new File(dir, "b0000.bak")
+    assert(new File(dir, "b0000").renameTo(bak))
+    // the bucket .bak rule rolls back: the delete never happened
+    assert(TableStore.read(spark, dir).get.count() === 10)
+    assert(!bak.exists() && new File(dir, "b0000").isDirectory)
+    // and the retried delete converges, clearing the stale staging dir
+    TableStore.deleteCascade(spark, Seq(3).toDF("k"), "k", parent = (dir, "k"))
+    assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().map(_._1).toSet
+      === (1 to 10).toSet - 3)
+    assert(!new File(staging).exists())
   }
 
-  test("recover: interrupted flat rewrite rolls forward with the swap marker") {
-    val dir = Files.createTempDirectory("tsrec3").toString + "/t"
-    TableStore.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), dir)
-    // a committed rewrite (marker present) whose staged survivors were
-    // not yet moved in: recovery must promote them and drop the backup
-    val flat = new File(dir).listFiles().filter(f =>
-      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val bakDir = new File(dir + ".flatbak"); bakDir.mkdirs()
-    flat.foreach(f => assert(f.renameTo(new File(bakDir, f.getName))))
-    val staging = new File(dir + ".flatstaging").toString
-    Seq((1, "a")).toDF("k", "v").write.parquet(staging) // the survivors
-    Files.write(new File(dir, "_graft_swap").toPath, Array.emptyByteArray)
-    assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().toSet
-      === Set((1, "a")), "roll-forward must keep only the staged survivors")
-    assert(!bakDir.exists() && !new File(dir, "_graft_swap").exists())
-  }
-
-  test("deleteCascade flat rewrite survives and stays correct end to end") {
+  test("deleteCascade on an appended table stays correct end to end") {
     val dir = Files.createTempDirectory("tsrec4").toString + "/t"
     TableStore.append((1 to 10).map(i => (i, s"v$i")).toDF("k", "v"), dir)
     TableStore.deleteCascade(spark, Seq(3, 7).toDF("k"), "k", parent = (dir, "k"))
     assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().map(_._1).toSet
       === (1 to 10).toSet -- Set(3, 7))
-    // no protocol droppings left behind
-    assert(!new File(dir + ".flatbak").exists())
-    assert(!new File(dir + ".flatstaging").exists())
-    assert(!new File(dir, "_graft_swap").exists())
+    // still one bucket, and no protocol droppings left behind
+    assert(bucketFileState(dir).keySet === Set("b0000"))
+    assert(!new File(dir, "b0000.bak").exists())
+    assert(!new File(dir + ".delstaging").exists())
   }
 
   test("requireNonEmpty guards empty bulk writes") {
