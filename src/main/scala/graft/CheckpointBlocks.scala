@@ -9,10 +9,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * CacheManager to uncache the query, and the CacheManager never knows
   * about checkpoint RDDs — `localCheckpoint` persists the underlying
   * RDD directly. (This is also why `catalog.clearCache()` can't drop
-  * them and Bench sweeps `sc.getPersistentRDDs` between passes.) The
-  * blocks do get reclaimed eventually — ContextCleaner, after the frame
-  * becomes unreachable and a GC runs — but a long-lived session that
-  * drops a memo wants the storage back NOW, not at the next full GC.
+  * them.) The blocks do get reclaimed eventually — ContextCleaner,
+  * after the frame becomes unreachable and a GC runs — but a
+  * long-lived session that drops a memo wants the storage back NOW,
+  * not at the next full GC.
   *
   * [[release]] reaches the actual RDD through the frame's ROOT
   * LogicalRDD node and unpersists it — and only the root: a derived
@@ -60,43 +60,12 @@ object CheckpointBlocks {
     * partition, so every one of the ~200 jobs per build/search ran
     * 32-task stages whose per-task shuffle-file cost dominated (88 of
     * 214 task-CPU-seconds in x125 were shuffle WRITE time alone).
-    * Overridable via SPARK_GRAFT_CKPT_ROWS_PER_PART; the default
-    * targets partitions of tens of MB for vector rows — the guide's
-    * 100 MB - 1 GB post-shuffle partition rule, derived from measured
-    * row count rather than a core-count constant.
+    * The value targets partitions of tens of MB for vector rows — the
+    * guide's 100 MB - 1 GB post-shuffle partition rule, derived from
+    * measured row count rather than a core-count constant.
     */
-  val RowsPerPartition: Long =
-    sys.env.get("SPARK_GRAFT_CKPT_ROWS_PER_PART")
-      .flatMap(_.toLongOption).filter(_ >= 1L).getOrElse(65536L)
+  val RowsPerPartition: Long = 65536L
 
-  /** Checkpoint `df` hash-partitioned by `keys` at a partition count
-    * derived from `estRows` (consolidate-only: never more partitions
-    * than the plan would otherwise produce, so no new fan-out shuffle
-    * appears at scale), and CLAIM that partitioning on the resulting
-    * LogicalRDD (see GraftCleanCheckpoint.stripClaiming — AQE drops
-    * it otherwise). Downstream effect, measured in plans: every
-    * key-equi join against the checkpoint stops re-exchanging the
-    * checkpointed side, and at fixture scale the iteration state
-    * collapses to single-task stages instead of
-    * `spark.sql.shuffle.partitions`-task ones.
-    *
-    * ONLY for frames whose downstream math is partition-layout-proof
-    * (integer sums, per-row expressions, windows with total
-    * tie-broken orders — the kNN graph family's documented
-    * bit-determinism discipline). Frames feeding order-sensitive
-    * double aggregations (k-means member sums, GD partials) must keep
-    * their natural layout: a different accumulation order moves the
-    * last float bits, and those families are no_oracle precisely
-    * because their outputs depend on it.
-    */
-  /** Size-derived partition count: estRows at [[RowsPerPartition]],
-    * floored at 1, capped at the cluster's parallelism. Used both for
-    * sized checkpoints and for the EXPLICIT repartitions iterative
-    * operators place before their dedup+window merges — an explicit
-    * count keeps AQE from spending a re-planning cycle coalescing a
-    * shuffle whose right size was known from the operator's own row
-    * bound.
-    */
   /** Run `body` with adaptive execution OFF in this session, restoring
     * the previous value after. For ITERATIVE-LOOP materializations
     * whose layouts the operator already fixed — explicit sized
@@ -126,7 +95,15 @@ object CheckpointBlocks {
     }
   }
 
-  /** The core-count cap on consolidation is itself bounded: past
+  /** Size-derived partition count: estRows at [[RowsPerPartition]],
+    * floored at 1, capped at the cluster's parallelism. Used both for
+    * sized checkpoints and for the EXPLICIT repartitions iterative
+    * operators place before their dedup+window merges — an explicit
+    * count keeps AQE from spending a re-planning cycle coalescing a
+    * shuffle whose right size was known from the operator's own row
+    * bound.
+    *
+    * The core-count cap on consolidation is itself bounded: past
     * `8 x RowsPerPartition` rows per partition the cap stops applying —
     * a hard cap at parallelism would put estRows/cores rows in each
     * partition, which at 10^9-row state blows the 2 GB block limit and
@@ -144,6 +121,26 @@ object CheckpointBlocks {
       floor)).toInt
   }
 
+  /** Checkpoint `df` hash-partitioned by `keys` at a partition count
+    * derived from `estRows` (consolidate-only: never more partitions
+    * than the plan would otherwise produce, so no new fan-out shuffle
+    * appears at scale), and CLAIM that partitioning on the resulting
+    * LogicalRDD (see GraftCleanCheckpoint.stripClaiming — AQE drops
+    * it otherwise). Downstream effect, measured in plans: every
+    * key-equi join against the checkpoint stops re-exchanging the
+    * checkpointed side, and at fixture scale the iteration state
+    * collapses to single-task stages instead of
+    * `spark.sql.shuffle.partitions`-task ones.
+    *
+    * ONLY for frames whose downstream math is partition-layout-proof
+    * (integer sums, per-row expressions, windows with total
+    * tie-broken orders — the kNN graph family's documented
+    * bit-determinism discipline). Frames feeding order-sensitive
+    * double aggregations (k-means member sums, GD partials) must keep
+    * their natural layout: a different accumulation order moves the
+    * last float bits, and those families are no_oracle precisely
+    * because their outputs depend on it.
+    */
   def sizedCheckpoint(df: DataFrame, keys: Seq[String],
                       estRows: Long): DataFrame = {
     val n = partitionsFor(df.sparkSession, estRows)
@@ -155,9 +152,8 @@ object CheckpointBlocks {
       keys)
   }
 
-  /** Opt-in claim validation — `spark.graft.validateClaims=true` (or
-    * env SPARK_GRAFT_VALIDATE_CLAIMS=1): after claiming hash(keys) on a
-    * checkpoint, scan it and assert every row hashes to its partition
+  /** Opt-in claim validation — `spark.graft.validateClaims=true`:
+    * after claiming hash(keys) on a checkpoint, scan it and assert every row hashes to its partition
     * (`pmod(hash(keys), n) == spark_partition_id()`; SQL `hash` IS
     * Murmur3 seed 42, exactly HashPartitioning's
     * partitionIdExpression). A violated claim otherwise MIS-JOINS
@@ -171,7 +167,6 @@ object CheckpointBlocks {
   private def validateClaim(ck: DataFrame, keys: Seq[String]): DataFrame = {
     val enabled = ck.sparkSession.conf
       .getOption("spark.graft.validateClaims")
-      .orElse(sys.env.get("SPARK_GRAFT_VALIDATE_CLAIMS"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     if (enabled) {
       import org.apache.spark.sql.functions._

@@ -18,13 +18,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated subset filter, mirroring Bench: fast local
+    // Optional comma-separated subset filter: fast local
     // iteration on a single query without dumping all ~90.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     val selected = only match {
       case Some(names) =>
-        // Prefix matching, same as Bench: SPARK_GRAFT_ONLY=x23 selects
+        // Prefix matching: SPARK_GRAFT_ONLY=x23 selects
         // x23_dedup_clusters. Warn when nothing matches (typo'd filter
         // would otherwise silently write zero results).
         val sel = SparkEntry.queries.filter { case (k, _) => names.exists(k.startsWith) }

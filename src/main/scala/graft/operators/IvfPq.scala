@@ -150,13 +150,6 @@ object IvfPq {
     graft.CheckpointBlocks.release(idx.codes)
   }
 
-  /** Unpersist before clearing — see [[Pq.clearMemo]]'s rationale. */
-  def clearMemo(): Unit = {
-    shared.values.forEach { case (idx, _) => unpersistIndex(idx) }
-    shared.clear()
-    curveMemo.clear()
-  }
-
   private def index(s: SparkSession, d: String,
                     corpus: DataFrame): (Index, Int) = {
     val key = (s, d)

@@ -832,35 +832,6 @@ object KnnGraph {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (DataFrame, Seq[Long])]()
 
-  def clearMemo(): Unit = {
-    memo.values.forEach { case (df, _) => graft.CheckpointBlocks.release(df) }
-    memo.clear()
-    idxMemo.values.forEach { case (v, a) =>
-      graft.CheckpointBlocks.release(a)
-      graft.CheckpointBlocks.release(v)
-    }
-    idxMemo.clear()
-    searchMemo.values.forEach { case (df, _) =>
-      graft.CheckpointBlocks.release(df) }
-    searchMemo.clear()
-    curveMemo.values.forEach(graft.CheckpointBlocks.release(_))
-    curveMemo.clear()
-    appendMemo.values.forEach { case (m, g) =>
-      graft.CheckpointBlocks.release(m)
-      graft.CheckpointBlocks.release(g)
-    }
-    appendMemo.clear()
-    filteredMemo.values.forEach { case (df, _) =>
-      graft.CheckpointBlocks.release(df) }
-    filteredMemo.clear()
-    corpusMemo.values.forEach(graft.CheckpointBlocks.release(_))
-    corpusMemo.clear()
-    // dim is a 4-byte constant, but each bench pass replays from a
-    // cleared memo by contract — drop it too (signs are dim-keyed pure
-    // constants and carry no session reference; they stay)
-    dimMemo.clear()
-  }
-
   /** The declared family's corpus: a LOW-INTRINSIC-DIMENSION manifold
     * embedded in the 64-dim ambient space — vec = W·u + 0.02·noise,
     * where u is a deterministic 4-dim latent per id (xxhash uniforms),
@@ -1055,7 +1026,7 @@ object KnnGraph {
     * x122 serving, the x124 curve, and x128 filtered serving all walk
     * the SAME built graph over the same corpus — one norm pass + one
     * adjacency distinct serves all three (each rebuilding its own was
-    * two redundant corpus-sized distincts per bench pass).
+    * two redundant corpus-sized distincts per session).
     */
   private val idxMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (DataFrame, DataFrame)]()

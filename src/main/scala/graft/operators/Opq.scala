@@ -196,11 +196,6 @@ object Opq {
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (OpqModel, DataFrame, Int)]()
 
-  def clearMemo(): Unit = {
-    shared.values.forEach { case (_, codes, _) => graft.CheckpointBlocks.release(codes) }
-    shared.clear()
-  }
-
   private def index(s: SparkSession, d: String,
                     corpus: DataFrame): (OpqModel, DataFrame, Int) = {
     val key = (s, d)
@@ -418,8 +413,8 @@ object Opq {
       viol.result()
     } finally {
       // both checkpoints release on EVERY exit — an exception mid-gate
-      // must not leak storage blocks for the life of the session (the
-      // clearMemo lesson); exact is null only if its checkpoint threw
+      // must not leak storage blocks for the life of the session; exact
+      // is null only if its checkpoint threw
       exactRef.foreach(graft.CheckpointBlocks.release)
       graft.CheckpointBlocks.release(corpus)
     }

@@ -165,7 +165,7 @@ object PassageDedup {
     // count whatever the index size. (occ's windows are all in batchW,
     // so filtering stored to the intersection changes nothing
     // semantically.) This is what keeps per-batch cost flat as the
-    // corpus grows — the pass_incr ScaleCheck probe pins it; shuffling
+    // corpus grows (PlanAuditSpec pins the plan shape); shuffling
     // the stored side through the semi-join grew 3x across a 16x index.
     // The broadcast decision is made from a MEASURED count, not left to
     // the planner: static size estimates through an explode+distinct

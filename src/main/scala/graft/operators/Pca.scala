@@ -169,9 +169,6 @@ object Pca {
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PcaModel]()
 
-  /** Driver-state model memo only (no cluster blocks to release). */
-  def clearMemo(): Unit = shared.clear()
-
   private def model(s: SparkSession, d: String): PcaModel = {
     val key = (s, d)
     Option(shared.get(key)).getOrElse {

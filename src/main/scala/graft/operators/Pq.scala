@@ -322,32 +322,6 @@ object Pq {
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (PqCodebook, DataFrame, Int)]()
 
-  /** Release the memo's checkpoint blocks BEFORE dropping the
-    * references: clear()-without-release leaves them pinned in the
-    * block manager until GC + ContextCleaner get around to them —
-    * Bench compensated with a getPersistentRDDs sweep, but long-lived
-    * callers (a notebook session) would leak storage memory. NOTE
-    * `Dataset.unpersist` cannot do this ([[graft.CheckpointBlocks]]).
-    *
-    * CONTRACT (sharper than the old clear()): released frames are
-    * IRRECOVERABLE — lineage was truncated at the checkpoint, so any
-    * caller still holding a frame obtained from [[index]] /
-    * [[corpusWithDups]] across a clearMemo() gets "checkpoint block
-    * not found" on its next action. Call only at a quiescent point
-    * where no consumer holds memoized frames (Bench between passes);
-    * if these memos ever serve concurrent consumers, reference-count
-    * instead. Same contract in IvfPq/Opq.clearMemo.
-    */
-  def clearMemo(): Unit = {
-    shared.values.forEach { case (_, codes, _) => graft.CheckpointBlocks.release(codes) }
-    shared.clear()
-    incShared.values.forEach(st => graft.CheckpointBlocks.release(st.merged))
-    incShared.clear()
-    corpusMemo.values.forEach(graft.CheckpointBlocks.release)
-    corpusMemo.clear()
-    curveMemo.clear()
-  }
-
   private def index(s: SparkSession, d: String,
                     corpus: DataFrame): (PqCodebook, DataFrame, Int) = {
     val key = (s, d)

@@ -312,9 +312,6 @@ object QualityClassifier {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), TrainResult]()
 
-  /** Driver-state memo only (no cluster blocks held). */
-  def clearMemo(): Unit = memo.clear()
-
   private def trained(s: SparkSession, d: String): TrainResult = {
     val key = (s, d)
     Option(memo.get(key)).getOrElse {

@@ -87,7 +87,7 @@ object RetrievalQueries {
     // lazy plan for the RESULT; a separate short-lived checkpoint for
     // the driver scalars. The old single checkpoint ESCAPED through the
     // returned lazy frame, so it could never be released and leaked a
-    // storage block per call (found by MemoReleaseAuditSpec) — the
+    // storage block per call — the
     // result now recomputes this one aggregation when consumed instead
     // of pinning executor storage forever.
     def rawPlan = tok.groupBy(col("w")).agg(count(lit(1)).as("cr"))
@@ -303,9 +303,6 @@ object RetrievalQueries {
 
   private val mmrPoolMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Map[Long, IndexedSeq[(Long, Double, Array[Double])]]]()
-
-  /** Driver-state pool memo only (no cluster blocks to release). */
-  def clearMemo(): Unit = mmrPoolMemo.clear()
 
   /** The shared x105 candidate pool, collected once per (session, dir):
     * the brute-force shortlist is the pair's only corpus-sized work, and

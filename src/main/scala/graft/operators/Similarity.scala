@@ -451,8 +451,7 @@ object Similarity {
         // assignments relation is a projection over `assign`, so only
         // this handle can ever release them) — without it every
         // refined build leaked two corpus-sized blocks until a driver
-        // GC happened to run (found by MemoReleaseAuditSpec, which
-        // only failed when the grace window missed a GC)
+        // GC happened to run
         roots = Seq(centroids, assign)),
       objs.result())
   }

