@@ -133,6 +133,22 @@ class TableStoreSpec extends SparkSpecBase {
       .as[(Int, String)].collect().toSeq === Seq((42, "v42")))
   }
 
+  test("lookup on an absent table is None") {
+    val dir = Files.createTempDirectory("tslk").toString + "/absent"
+    assert(TableStore.lookup(spark, dir, "k", 1).isEmpty)
+    assert(!new File(dir).exists())
+  }
+
+  test("lookup on bucket dirs without a bucket marker is None") {
+    // append and upsert declare the marker before any bucket lands, so
+    // without it the key-to-bucket modulus is unknown: lookup must not
+    // guess one (a wrong modulus probes the wrong bucket)
+    val dir = Files.createTempDirectory("tsnm").toString + "/t"
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/b0000")
+    assert(TableStore.read(spark, dir).get.count() === 2)
+    assert(TableStore.lookup(spark, dir, "k", 1).isEmpty)
+  }
+
   test("append then upsert on the same table merges into its one bucket") {
     val dir = Files.createTempDirectory("ts6").toString + "/t"
     TableStore.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
