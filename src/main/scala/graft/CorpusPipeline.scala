@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Contamination, CurationQueries, Dedup,
@@ -32,8 +32,11 @@ import graft.sources.WarcCodec
   * decontamination probe ships a Bloom sketch of the SMALL held-out
   * side once instead of shuffling the train corpus, and packing runs
   * per-shard. Stage boundaries localCheckpoint the surviving relation
-  * so the report's stage counts (and the multi-consumer fan-outs) do
-  * not replay the WARC scan or the LSH join.
+  * so the multi-consumer fan-outs do not replay the WARC scan or the
+  * LSH join, and the report's stage counts are observed on those same
+  * checkpoints (`Dataset.observe`) instead of recounted. The language,
+  * Gopher, repetition and quality gates are per-document predicates
+  * evaluated in one projection behind one checkpoint.
   */
 object CorpusPipeline {
 
@@ -64,6 +67,9 @@ object CorpusPipeline {
 
   /** Per-stage surviving-document counts — the corpus ledger a real
     * curation run reports (what was dropped, where, and why).
+    * Each count is observed on its stage's checkpoint (raw scan, gates,
+    * dedup, decontamination) or read from one aggregate (packs, tokens,
+    * splits); only `ingested` costs a count of its own.
     */
   final case class Report(
       ingested: Long, quarantinedBlobs: Long, keptUrl: Long,
@@ -116,11 +122,7 @@ object CorpusPipeline {
     * corpus opt in per run.
     */
   private[graft] def gopherFilter(docs: DataFrame): DataFrame =
-    docs.join(
-      CurationQueries.gopherRules(
-          CurationQueries.gopherStats(docs, "doc_id", "text"))
-        .filter(col("pass")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    docs.filter(gopherKept)
 
   /** Gopher REPETITION gate (x106, opt-in like [[gopherFilter]]): drop
     * documents whose top-n-gram / duplicated-n-gram character fractions
@@ -130,10 +132,7 @@ object CorpusPipeline {
     * before they move a distinct-trigram ratio).
     */
   private[graft] def repetitionFilter(docs: DataFrame): DataFrame =
-    docs.join(
-      CurationQueries.repetitionRules(docs, "doc_id", "text")
-        .filter(col("rep_keep")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    docs.filter(repetitionKept)
 
   /** Mojibake repair (x107, opt-in): rewrite the text column through
     * the guarded decode-encode roundtrip BEFORE language ID, the
@@ -148,19 +147,54 @@ object CorpusPipeline {
       graft.operators.EncodingRepair.fixedText(col("text")))
 
   private[graft] def languageFilter(docs: DataFrame, cfg: Config): DataFrame =
-    docs.withColumn("lang", TextAnalysis.languageId(col("text")))
-      .filter(col("lang").isInCollection(cfg.languages))
-      .drop("lang")
+    docs.filter(languageKept(cfg))
 
-  private[graft] def qualityFilter(docs: DataFrame, cfg: Config): DataFrame = {
-    val feats = TextAnalysis.qualityFeatures(docs, "doc_id", "text")
-      .select(col("doc_id"), col("n_tokens"), col("quality"))
-    val rep = PackingQueries.repetitionRatio(docs, "doc_id", "text")
-    docs.join(feats, "doc_id").join(rep, "doc_id")
-      .filter(col("n_tokens") >= cfg.minTokens &&
-        col("quality") >= cfg.minQuality &&
-        col("rep_ratio") <= cfg.maxRepetition)
-      .select(col("doc_id"), col("url"), col("date"), col("text"))
+  private[graft] def qualityFilter(docs: DataFrame, cfg: Config): DataFrame =
+    docs.filter(qualityKept(cfg))
+
+  // The per-document gate predicates over the `text` column. Each is
+  // built from the expressions of its oracle-checked frame operator, so
+  // the gate and the declared query cannot drift apart; doc_id is
+  // unique, so a filter on the predicate keeps exactly the docs the
+  // frame's pass bit keeps.
+  private def languageKept(cfg: Config): Column =
+    TextAnalysis.languageId(col("text")).isInCollection(cfg.languages)
+
+  private def gopherKept: Column = CurationQueries.gopherPass(col("text"))
+
+  private def repetitionKept: Column = CurationQueries.repetitionKeep(col("text"))
+
+  /** x09 score and length floor, then the x30 trigram repetition ratio
+    * (`&&` skips the ratio for docs the first half already drops).
+    */
+  private def qualityKept(cfg: Config): Column =
+    element_at(transform(array(TextAnalysis.qualityFeaturesOf(col("text"))), f =>
+      f.getField("n_tokens") >= cfg.minTokens &&
+        f.getField("quality") >= cfg.minQuality), 1) &&
+      PackingQueries.repetitionRatioOf(col("text")) <= cfg.maxRepetition
+
+  /** Stages 3-5 in one pass: the same drops as [[languageFilter]],
+    * [[gopherFilter]] (if on), [[repetitionFilter]] (if on) and
+    * [[qualityFilter]] applied in turn, in one projection and one
+    * checkpoint. `__gate` is the index of the first gate a doc fails
+    * (4 = kept); `CaseWhen` stops at the first true branch, so a later
+    * gate runs only on docs that passed the earlier ones. A predicate
+    * that is null counts as a failure, as it does under `filter`.
+    * Returns the survivors and the surviving counts observed while the
+    * checkpoint materialises: input, then after language, Gopher,
+    * repetition and quality.
+    */
+  private[graft] def gatePass(docs: DataFrame, cfg: Config): (DataFrame, Seq[Long]) = {
+    def failed(p: Column): Column = !coalesce(p, lit(false))
+    val gate = when(failed(languageKept(cfg)), 0)
+      .when(failed(if (cfg.gopherRules) gopherKept else lit(true)), 1)
+      .when(failed(if (cfg.repetitionGate) repetitionKept else lit(true)), 2)
+      .when(failed(qualityKept(cfg)), 3)
+      .otherwise(4)
+    val (ck, counts) = CheckpointBlocks.observedCheckpoint(
+      docs.withColumn("__gate", gate),
+      count(lit(1)) +: (1 to 4).map(k => count_if(col("__gate") >= k)): _*)
+    (ck.filter(col("__gate") === 4).drop("__gate"), counts.map(_.asInstanceOf[Long]))
   }
 
   private[graft] def redactPii(docs: DataFrame): DataFrame = {
@@ -179,9 +213,18 @@ object CorpusPipeline {
     */
   def run(spark: SparkSession, warcDir: String,
           heldOut: DataFrame, cfg: Config = Config()): Result = {
+    // stage checkpoints observe their own row count while they
+    // materialise, so the ledger costs no job of its own
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val (ck, Seq(n)) = CheckpointBlocks.observedCheckpoint(df, count(lit(1)))
+      (ck, n.asInstanceOf[Long])
+    }
+
     // 1. ingest: streaming WARC scan with the DLQ channel; materialized
     // once — every later stage and count derives from this relation
-    val raw = WarcCodec.rawDocuments(spark, warcDir).toDF().localCheckpoint(true)
+    val (raw, Seq(nQuarantined)) = CheckpointBlocks.observedCheckpoint(
+      WarcCodec.rawDocuments(spark, warcDir).toDF(),
+      count_if(col("blob_error").isNotNull))
     val quarantined = raw.filter(col("blob_error").isNotNull)
       .select(col("path"), col("blob_error"))
     val docs = WarcCodec.documentsFromRaw(raw)
@@ -204,34 +247,27 @@ object CorpusPipeline {
       if (cfg.encodingFix) fixEncoding(urlKept).localCheckpoint(true)
       else urlKept
 
-    // 3. language filter (x08)
-    val langKept = languageFilter(fixed, cfg)
-
-    // 4. Gopher rule gate (x49, opt-in) — after language ID (the rules
-    // assume prose in a known language), before the blended score
-    val gopherKept = if (cfg.gopherRules) gopherFilter(langKept) else langKept
-
-    // 4b. Gopher repetition gate (x106, opt-in) — the n-gram repetition
-    // half of the Gopher table, next to its length/symbol half above
-    val repKept =
-      if (cfg.repetitionGate) repetitionFilter(gopherKept) else gopherKept
-
-    // 5. quality gates (x09 score, x30 repetition, length floor)
-    val qualKept = qualityFilter(repKept, cfg)
+    // 3-5. the per-document gates in one pass (see gatePass): language
+    // filter (x08); Gopher rule gate (x49, opt-in) — after language ID,
+    // the rules assume prose in a known language; Gopher repetition
+    // gate (x106, opt-in) — the n-gram half of the Gopher table, next
+    // to its length/symbol half; quality gates (x09 score, x30
+    // repetition, length floor)
+    val (qualKept, Seq(keptUrl, keptLanguage, keptGopher, keptRepetition,
+      keptQuality)) = gatePass(fixed, cfg)
 
     // 6. PII redaction (x36) BEFORE dedup: redaction canonicalizes text,
     // so two docs differing only in a contact line dedup together
     val redacted = redactPii(qualKept)
 
     // 7. exact dedup keep-first (x01)
-    val exact = Dedup.exactKeepFirst(redacted, "doc_id", "text")
-      .localCheckpoint(true)
+    val (exact, nExact) = counted(Dedup.exactKeepFirst(redacted, "doc_id", "text"))
 
     // 8. near-dup keep-canonical (x03 pairs -> x24 canonical member)
     val pairs = Dedup.minhashLshPairs(exact, "doc_id", "text",
       cfg.shingleN, cfg.numPerm, cfg.bands, cfg.nearDupThreshold)
-    val canonical = Components.keepCanonical(exact, "doc_id",
-      pairs.select(col("a"), col("b"))).localCheckpoint(true)
+    val (canonical, nCanonical) = counted(Components.keepCanonical(exact, "doc_id",
+      pairs.select(col("a"), col("b"))))
 
     // 9. paragraph-level corpus dedup (x40, the FineWeb pass): a
     // paragraph recurring across the SURVIVING documents is
@@ -239,13 +275,13 @@ object CorpusPipeline {
     // carrying documents differ); drop it from every doc, keep the
     // survivors' remaining paragraphs in order, and remove docs
     // hollowed out entirely
-    val paraKept = canonical.select(col("doc_id"), col("url"), col("date"))
-      .join(ParagraphOps.paragraphDedup(canonical, "doc_id", "text",
-            cfg.paraWidth, cfg.paraMaxDf)
-          .filter(col("n_kept") > 0)
-          .select(col("doc_id"), col("clean_text").as("text")),
-        Seq("doc_id"))
-      .localCheckpoint(true)
+    val (paraKept, nParaKept) = counted(
+      canonical.select(col("doc_id"), col("url"), col("date"))
+        .join(ParagraphOps.paragraphDedup(canonical, "doc_id", "text",
+              cfg.paraWidth, cfg.paraMaxDf)
+            .filter(col("n_kept") > 0)
+            .select(col("doc_id"), col("clean_text").as("text")),
+          Seq("doc_id")))
 
     // 10. decontamination (x38 shape): the held-out split is the SMALL
     // side — its window Bloom ships to executors once and the train
@@ -259,8 +295,8 @@ object CorpusPipeline {
     val contaminated = Contamination.decontaminationBloomFrac(trainW, evalW)
       .filter(col("bloom_frac") > cfg.maxContamFrac)
       .select(col("id").as("doc_id"))
-    val curated = paraKept.join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val (curated, nCurated) =
+      counted(paraKept.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // 10b. cluster-group split assignment (x110n, opt-in): group key =
     // the canonical near-dup CLUSTER id over the SHIPPED docs at a
@@ -306,16 +342,16 @@ object CorpusPipeline {
       splits = splits,
       report = Report(
         ingested = docs.count(),
-        quarantinedBlobs = quarantined.count(),
-        keptUrl = urlKept.count(),
-        keptLanguage = langKept.count(),
-        keptGopher = gopherKept.count(),
-        keptRepetition = repKept.count(),
-        keptQuality = qualKept.count(),
-        afterExactDedup = exact.count(),
-        afterNearDedup = canonical.count(),
-        afterParaDedup = paraKept.count(),
-        afterDecontamination = curated.count(),
+        quarantinedBlobs = nQuarantined.asInstanceOf[Long],
+        keptUrl = keptUrl,
+        keptLanguage = keptLanguage,
+        keptGopher = keptGopher,
+        keptRepetition = keptRepetition,
+        keptQuality = keptQuality,
+        afterExactDedup = nExact,
+        afterNearDedup = nCanonical,
+        afterParaDedup = nParaKept,
+        afterDecontamination = nCurated,
         packs = packStats.getLong(0),
         packedTokens = packStats.getLong(1),
         splitTrain = splitCounts._1,

@@ -33,26 +33,24 @@ object CurationQueries {
     * shared tokenizer), so every rule below is an exact integer
     * predicate — no float ratio crosses the oracle boundary.
     */
-  def gopherStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // the token array binds ONCE (the windowGrams lesson): five stat
-    // columns referenced it, and whenever a wide curation projection
-    // overflows codegen into interpreted eval nothing de-duplicates the
-    // five tokenize subtrees — a 5x scan multiplier on every document
-    val g = element_at(transform(array(tokens(col(textCol))), ts => struct(
+  def gopherStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), gopherStatsOf(col(textCol)).as("__g"))
+      .select(col(idCol), col("__g.*"))
+
+  /** The [[gopherStats]] counts of one text, as a struct. The token
+    * array binds ONCE (the windowGrams lesson): five stat fields
+    * reference it, and whenever a wide curation projection overflows
+    * codegen into interpreted eval nothing de-duplicates the five
+    * tokenize subtrees — a 5x scan multiplier on every document.
+    */
+  private def gopherStatsOf(text: Column): Column =
+    element_at(transform(array(tokens(text)), ts => struct(
       size(ts).as("n_words"),
+      length(regexp_replace(text, "\\s+", "")).as("n_nonspace_chars"),
       size(filter(ts, t => t.rlike("[a-z]"))).as("n_alpha_words"),
       size(filter(ts, t => t.rlike("^[^a-z0-9]+$"))).as("n_symbol_words"),
       size(array_intersect(array_distinct(ts),
         array(stopMarkers.map(lit): _*))).as("n_stop_distinct"))), 1)
-    docs.select(col(idCol), g.as("__g"),
-        length(regexp_replace(col(textCol), "\\s+", "")).as("n_nonspace_chars"))
-      .select(col(idCol),
-        col("__g").getField("n_words").as("n_words"),
-        col("n_nonspace_chars"),
-        col("__g").getField("n_alpha_words").as("n_alpha_words"),
-        col("__g").getField("n_symbol_words").as("n_symbol_words"),
-        col("__g").getField("n_stop_distinct").as("n_stop_distinct"))
-  }
 
   /** Gopher quality rules over the stats columns, as integer/boolean
     * predicates (ratio thresholds cross-multiplied so the comparison is
@@ -61,19 +59,28 @@ object CurationQueries {
     * distinct stopwords present.
     */
   def gopherRules(stats: DataFrame): DataFrame = {
-    val rWc = col("n_words").between(10, 100000)
-    val rMwl = (lit(3) * col("n_words") <= col("n_nonspace_chars")) &&
-      (col("n_nonspace_chars") <= lit(10) * col("n_words"))
-    val rSym = lit(10) * col("n_symbol_words") <= col("n_words")
-    val rAlpha = lit(5) * col("n_alpha_words") >= lit(4) * col("n_words")
-    val rStop = col("n_stop_distinct") >= 2
-    stats.withColumn("r_word_count", rWc)
-      .withColumn("r_mean_word_len", rMwl)
-      .withColumn("r_symbol_ratio", rSym)
-      .withColumn("r_alpha_words", rAlpha)
-      .withColumn("r_stopwords", rStop)
-      .withColumn("pass", rWc && rMwl && rSym && rAlpha && rStop)
+    val rules = gopherRuleCols(col(_))
+    rules.foldLeft(stats) { case (df, (name, r)) => df.withColumn(name, r) }
+      .withColumn("pass", rules.map(_._2).reduce(_ && _))
   }
+
+  /** The [[gopherRules]] `pass` bit of one text, as a per-row predicate
+    * (the same stats and rule expressions as the frame pair).
+    */
+  def gopherPass(text: Column): Column =
+    element_at(transform(array(gopherStatsOf(text)), g =>
+      gopherRuleCols(g.getField(_)).map(_._2).reduce(_ && _)), 1)
+
+  /** The rule columns over a stat lookup (`col` for the stats frame, a
+    * struct field for the per-row predicate).
+    */
+  private def gopherRuleCols(stat: String => Column): Seq[(String, Column)] = Seq(
+    "r_word_count" -> stat("n_words").between(10, 100000),
+    "r_mean_word_len" -> ((lit(3) * stat("n_words") <= stat("n_nonspace_chars")) &&
+      (stat("n_nonspace_chars") <= lit(10) * stat("n_words"))),
+    "r_symbol_ratio" -> (lit(10) * stat("n_symbol_words") <= stat("n_words")),
+    "r_alpha_words" -> (lit(5) * stat("n_alpha_words") >= lit(4) * stat("n_words")),
+    "r_stopwords" -> (stat("n_stop_distinct") >= 2))
 
   /** Gopher repetition-rule thresholds (Rae et al. 2021, Table A1) as
     * integer percents: a document is dropped when the character
@@ -100,49 +107,57 @@ object CurationQueries {
     * scan-project stage).
     */
   def repetitionRules(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val ts = tokens(col(textCol))
-    val base = docs.select(col(idCol), ts.as("__ts"),
-      greatest(length(array_join(ts, " ")), lit(1)).cast("long").as("__total"))
+    val c = (f: String) => col("__c").getField(f)
+    val fracCols = (topGramMaxPct.map { case (n, _) => s"top$n" } ++
+      dupGramMaxPct.map { case (n, _) => s"dup$n" }).map(f =>
+        round(least(c(f).cast("double") / c("total").cast("double"), lit(1.0)), 6).as(f))
+    docs.select(col(idCol), repetitionCharsOf(col(textCol)).as("__c"))
+      .select(col(idCol) +: fracCols :+ repetitionKeepOf(c).as("rep_keep"): _*)
+  }
+
+  /** The [[repetitionRules]] `rep_keep` bit of one text, as a per-row
+    * predicate (the same char counts and threshold expressions).
+    */
+  def repetitionKeep(text: Column): Column =
+    element_at(transform(array(repetitionCharsOf(text)), c =>
+      repetitionKeepOf(c.getField(_))), 1)
+
+  /** Per text, a struct of `total` (chars of the token join, floored at
+    * 1) and the covered chars of every rule (`top2..4`, `dup5..10`).
+    * The token array binds once through the outer lambda variable.
+    */
+  private def repetitionCharsOf(text: Column): Column = {
     // chars covered by all occurrences of the heaviest n-gram. The
     // gram array binds ONCE through a lambda variable (the windowGrams
     // lesson): capturing the computed `g` expression in the per-gram
     // lambdas would rebuild the whole window array once per DISTINCT
     // gram under interpreted HOF eval — O(distinct · L) array builds on
     // exactly the long documents the rules exist to judge.
-    def topChars(n: Int): Column =
-      element_at(transform(array(windowGrams(col("__ts"), n)), g =>
+    def topChars(ts: Column, n: Int): Column =
+      element_at(transform(array(windowGrams(ts, n)), g =>
         array_max(transform(array_distinct(g),
           x => size(filter(g, y => y === x)).cast("long") *
             length(x).cast("long")))), 1)
     // chars covered by occurrences of n-grams appearing more than once
-    def dupChars(n: Int): Column =
-      element_at(transform(array(windowGrams(col("__ts"), n)), g =>
+    def dupChars(ts: Column, n: Int): Column =
+      element_at(transform(array(windowGrams(ts, n)), g =>
         aggregate(array_distinct(g), lit(0L), (acc, x) => {
           val c = size(filter(g, y => y === x)).cast("long")
           acc + when(c > 1L, c * length(x).cast("long")).otherwise(lit(0L))
         })), 1)
-    val charCols =
-      topGramMaxPct.map { case (n, _) => topChars(n).as(s"__top$n") } ++
-        dupGramMaxPct.map { case (n, _) => dupChars(n).as(s"__dup$n") }
-    val withChars =
-      base.select(col(idCol) +: col("__total") +: charCols: _*)
-    val fracCols =
-      topGramMaxPct.map { case (n, _) =>
-        round(least(col(s"__top$n").cast("double") /
-          col("__total").cast("double"), lit(1.0)), 6).as(s"top$n")
-      } ++
-        dupGramMaxPct.map { case (n, _) =>
-          round(least(col(s"__dup$n").cast("double") /
-            col("__total").cast("double"), lit(1.0)), 6).as(s"dup$n")
-        }
-    val keep =
-      (topGramMaxPct.map { case (n, p) =>
-        col(s"__top$n") * 100 <= col("__total") * p
-      } ++ dupGramMaxPct.map { case (n, p) =>
-        col(s"__dup$n") * 100 <= col("__total") * p
-      }).reduce(_ && _)
-    withChars.select(col(idCol) +: fracCols :+ keep.as("rep_keep"): _*)
+    element_at(transform(array(tokens(text)), ts => struct(
+      greatest(length(array_join(ts, " ")), lit(1)).cast("long").as("total") +:
+        (topGramMaxPct.map { case (n, _) => topChars(ts, n).as(s"top$n") } ++
+          dupGramMaxPct.map { case (n, _) => dupChars(ts, n).as(s"dup$n") }): _*)), 1)
   }
+
+  /** The keep bit over a char-count lookup: `100 * chars <= pct * total`
+    * for every rule, in exact integers.
+    */
+  private def repetitionKeepOf(c: String => Column): Column =
+    (topGramMaxPct.map { case (n, p) => c(s"top$n") * 100 <= c("total") * p } ++
+      dupGramMaxPct.map { case (n, p) => c(s"dup$n") * 100 <= c("total") * p })
+      .reduce(_ && _)
 
   /** Canonicalize a URL for dedup keying (the C4/RefinedWeb hygiene
     * set): strip the fragment, lowercase scheme+host, drop default

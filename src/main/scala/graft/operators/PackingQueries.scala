@@ -146,13 +146,16 @@ object PackingQueries {
     * dedup family ([[graft.functions.GraftFunctions.shingles]]).
     */
   def repetitionRatio(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), repetitionRatioOf(col(textCol)).as("rep_ratio"))
+
+  /** The [[repetitionRatio]] of one text, as a column. */
+  def repetitionRatioOf(text: Column): Column =
     // the gram array binds once (HOFs never codegen, so the duplicated
     // subtree would otherwise evaluate twice per row — distinct + size)
-    docs.select(col(idCol),
-      element_at(transform(array(windowGrams(tokens(col(textCol)), 3)), g =>
-        round(lit(1.0) -
-          size(array_distinct(g)).cast("double") /
-            size(g).cast("double"), 6)), 1).as("rep_ratio"))
+    element_at(transform(array(windowGrams(tokens(text), 3)), g =>
+      round(lit(1.0) -
+        size(array_distinct(g)).cast("double") /
+          size(g).cast("double"), 6)), 1)
 
   val queries: Map[String, Q] = Map(
     "x28_pack_sequences" -> ((s, d) =>

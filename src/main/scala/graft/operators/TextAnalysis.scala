@@ -76,12 +76,20 @@ object TextAnalysis {
     */
   def qualityFeatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
+    docs.select(col(idCol), length(t).as("n_chars"), qualityFeaturesOf(t).as("__f"))
+      .select(col(idCol), col("n_chars"), col("__f.*"))
+  }
+
+  /** The [[qualityFeatures]] of one text (all but `n_chars`), as a
+    * struct — the per-row form the curation quality gate filters on.
+    */
+  def qualityFeaturesOf(t: Column): Column = {
     val nChar = length(t)
     // token count and stopword ratio derive from ONE bound token array
     // (the windowGrams lesson — the direct form tokenized up to 4x per
     // row whenever a wide curation projection fell out of codegen);
     // the punct count is a single regexp the same binding carries
-    val feats = element_at(transform(array(tokens(t)), ts => {
+    element_at(transform(array(tokens(t)), ts => {
       val nTok = size(ts)
       val dts = array_distinct(ts)
       val stopRatio =
@@ -100,13 +108,6 @@ object TextAnalysis {
             (lit(1.0) - least(punct * 5.0, lit(1.0))) * 0.3 +
             least(stopRatio * 10.0, lit(1.0)) * 0.2, 6).as("quality"))
     }), 1)
-    docs.select(col(idCol), nChar.as("n_chars"), feats.as("__f"))
-      .select(col(idCol), col("n_chars"),
-        col("__f").getField("n_tokens").as("n_tokens"),
-        col("__f").getField("mean_token_len").as("mean_token_len"),
-        col("__f").getField("stopword_ratio").as("stopword_ratio"),
-        col("__f").getField("punct_ratio").as("punct_ratio"),
-        col("__f").getField("quality").as("quality"))
   }
 
   /** Content-defined document fingerprint: md5 over the sorted distinct

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** End-to-end spec of the composed corpus pipeline: a WARC directory
@@ -15,12 +16,13 @@ import org.apache.spark.sql.functions.col
 class CorpusPipelineSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def recBytes(uri: String, text: String): Array[Byte] = {
-    val payload = text.getBytes("ISO-8859-1")
+  private def recBytes(uri: String, text: String): Array[Byte] =
+    recRaw(uri, text.getBytes("ISO-8859-1"))
+
+  private def recRaw(uri: String, payload: Array[Byte]): Array[Byte] =
     (s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: $uri\r\n" +
       s"WARC-Date: 2026-01-01T00:00:00Z\r\nContent-Length: ${payload.length}\r\n\r\n")
       .getBytes("ISO-8859-1") ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-  }
 
   private def memberOf(b: Array[Byte]): Array[Byte] = {
     val o = new ByteArrayOutputStream()
@@ -186,10 +188,6 @@ class CorpusPipelineSpec extends SparkSpecBase {
     val d9a = s"$para0 $tailA"
     val d9b = s"$para0 $tailB"
 
-    def recRaw(uri: String, payload: Array[Byte]): Array[Byte] =
-      (s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: $uri\r\n" +
-        s"WARC-Date: 2026-01-01T00:00:00Z\r\nContent-Length: ${payload.length}\r\n\r\n")
-        .getBytes("ISO-8859-1") ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
     val docs = Seq(
       "http://k/1" -> dClean,
       "http://k/1?utm_source=feed" -> dClean, // canonical-URL re-crawl
@@ -306,6 +304,182 @@ class CorpusPipelineSpec extends SparkSpecBase {
       s"the near-dup pair split apart: ${splits(idOf(a))} vs ${splits(idOf(b))}")
     assert(splits.size === 4 && splits.values.forall(
       Set("train", "val", "test")))
+  }
+
+  // Edge-case fixture for the gate pass: every doc that must survive
+  // is ~40 words (see the FineWeb test on the Gopher char fractions)
+  private val gateClean = "the quick brown fox jumps over the lazy dog and " +
+    "runs across the sunny park while several children watch the colorful " +
+    "birds gather near the quiet stone fountain by the garden gate before " +
+    "the evening bells ring from the old tower"
+  private val gateAccent = "the café menu lists the naïve recipes and the " +
+    "straße address of the old corner shop where hungry visitors order the " +
+    "small almond cakes and strong black coffee before walking slowly to " +
+    "the busy train station across the bright market square"
+  private val gateDocs: Seq[(String, String)] = Seq(
+    "http://g/clean" -> gateClean,
+    "http://g/accent" -> gateAccent,
+    "http://g/moji" -> graft.operators.EncodingRepair.mojibake(gateAccent),
+    "http://g/empty" -> "",
+    "http://g/one" -> "hello",
+    "http://g/es" -> "el perro grande corre en la casa y de que es muy bonito",
+    "http://g/sym" -> "$$$ ### !!! %%% &&& ***",
+    "http://g/gophersym" ->
+      "the market report and the closing price data is higher ### ## !! ?? %% $$",
+    "http://g/loop" -> (("oak maple birch cedar willow poplar aspen elm " * 3) +
+      "the story and end"),
+    "http://g/loop2" -> ("breaking news update " +
+      Seq.fill(4)("click here to subscribe now today and the rest").mkString(" ")),
+    // hyphen-dense words: passes every Gopher rule, fails quality 0.3
+    "http://g/hyphen" -> {
+      val ws = (0 until 26).map(i => s"${('a' + i % 26).toChar}q-" +
+        s"${('a' + (i * 3) % 26).toChar}w-${('a' + (i * 7) % 26).toChar}z")
+      s"the ${ws.take(13).mkString(" ")} is ${ws.drop(13).mkString(" ")}"
+    })
+  private lazy val gateHeldOut =
+    Seq(("e1", "completely unrelated benchmark material here")).toDF("doc_id", "text")
+
+  private def gateDir(): String = {
+    val dir = Files.createTempDirectory("corpusgates").toString
+    Files.write(Paths.get(dir, "corpus.warc"), gateDocs.map { case (u, t) =>
+      recRaw(u, t.getBytes("UTF-8"))
+    }.reduce(_ ++ _))
+    dir
+  }
+
+  /** The gates applied one stage function at a time, as `CorpusStream`
+    * and the benchmark replay run them: the frames after URL hygiene,
+    * language, Gopher, repetition and quality.
+    */
+  private def gatesOneAtATime(fixed: DataFrame,
+                              cfg: CorpusPipeline.Config): Seq[DataFrame] = {
+    val lang = CorpusPipeline.languageFilter(fixed, cfg)
+    val gopher = if (cfg.gopherRules) CorpusPipeline.gopherFilter(lang) else lang
+    val rep = if (cfg.repetitionGate) CorpusPipeline.repetitionFilter(gopher) else gopher
+    Seq(fixed, lang, gopher, rep, CorpusPipeline.qualityFilter(rep, cfg))
+  }
+
+  /** The rest of the chain after the gates, stage by stage. */
+  private def curatedOneAtATime(qualKept: DataFrame,
+                                cfg: CorpusPipeline.Config): DataFrame = {
+    import graft.operators.{Components, Contamination, Dedup, ParagraphOps}
+    val exact = Dedup.exactKeepFirst(CorpusPipeline.redactPii(qualKept),
+      "doc_id", "text").localCheckpoint(true)
+    val pairs = Dedup.minhashLshPairs(exact, "doc_id", "text",
+      cfg.shingleN, cfg.numPerm, cfg.bands, cfg.nearDupThreshold)
+    val canonical = Components.keepCanonical(exact, "doc_id",
+      pairs.select(col("a"), col("b"))).localCheckpoint(true)
+    val paraKept = canonical.select(col("doc_id"), col("url"), col("date"))
+      .join(ParagraphOps.paragraphDedup(canonical, "doc_id", "text",
+          cfg.paraWidth, cfg.paraMaxDf)
+        .filter(col("n_kept") > 0)
+        .select(col("doc_id"), col("clean_text").as("text")), Seq("doc_id"))
+      .localCheckpoint(true)
+    val contaminated = Contamination.decontaminationBloomFrac(
+        Contamination.tokenWindows(paraKept, "doc_id", "text", cfg.contamWindow),
+        Contamination.tokenWindows(gateHeldOut, "doc_id", "text", cfg.contamWindow))
+      .filter(col("bloom_frac") > cfg.maxContamFrac)
+      .select(col("id").as("doc_id"))
+    paraKept.join(contaminated, Seq("doc_id"), "left_anti")
+  }
+
+  private def ids(df: DataFrame): Set[String] =
+    df.select("doc_id").as[String].collect().toSet
+
+  // all off, all on, and each of the three switches on alone
+  private val gateSwitches: Seq[CorpusPipeline.Config] =
+    Seq((false, false, false), (true, true, true), (true, false, false),
+      (false, true, false), (false, false, true)).map { case (g, r, e) =>
+      CorpusPipeline.Config(gopherRules = g, repetitionGate = r, encodingFix = e)
+    }
+
+  test("run's gate ledger equals the stage functions applied one at a time, across Config switches") {
+    val dir = gateDir()
+    gateSwitches.foreach { cfg =>
+      val r = CorpusPipeline.run(spark, dir, gateHeldOut, cfg)
+      val urlKept = CorpusPipeline.urlFilter(
+        graft.sources.WarcCodec.documents(spark, dir), cfg)
+      val stages = gatesOneAtATime(
+        if (cfg.encodingFix) CorpusPipeline.fixEncoding(urlKept) else urlKept, cfg)
+      val label = s"gopherRules=${cfg.gopherRules} repetitionGate=" +
+        s"${cfg.repetitionGate} encodingFix=${cfg.encodingFix}"
+      val counts = stages.map(_.count())
+      assert(Seq(r.report.keptUrl, r.report.keptLanguage, r.report.keptGopher,
+          r.report.keptRepetition, r.report.keptQuality) === counts, label)
+      if (cfg.gopherRules && cfg.repetitionGate)
+        assert(counts.sliding(2).forall { case Seq(a, b) => b < a },
+          s"every gate must drop a fixture doc: $counts")
+      val curated = curatedOneAtATime(stages.last, cfg)
+      assert(ids(r.curated) === ids(curated), label)
+      assert(r.report.afterDecontamination === curated.count(), label)
+    }
+  }
+
+  test("gatePass drops a doc whose gate predicate is null, as filter does") {
+    // "und" admits the null-text and symbol-only docs past language ID,
+    // so the later gates see them: on null text their predicates are
+    // null, and without the coalesce a null would fall through the
+    // CASE WHEN to the next branch and keep the doc
+    val docs = (gateDocs.zipWithIndex.map { case ((u, t), i) =>
+      (s"d$i", u, "2026-01-01", t)
+    } :+ (("dnull", "http://g/null", "2026-01-01", null: String)))
+      .toDF("doc_id", "url", "date", "text")
+    gateSwitches.foreach { base =>
+      val cfg = base.copy(languages = Set("en", "und"))
+      val fixed = if (cfg.encodingFix) CorpusPipeline.fixEncoding(docs) else docs
+      val (kept, counts) = CorpusPipeline.gatePass(fixed, cfg)
+      val stages = gatesOneAtATime(fixed, cfg)
+      assert(counts === stages.map(_.count()), cfg.toString)
+      assert(ids(kept) === ids(stages.last), cfg.toString)
+      assert(!ids(kept).contains("dnull"), cfg.toString)
+    }
+  }
+
+  test("the stage functions are per-row filters: no join in the gate chain's plan") {
+    val df = gateDocs.map { case (u, t) => (u, u, "2026-01-01", t) }
+      .toDF("doc_id", "url", "date", "text")
+    val cfg = CorpusPipeline.Config()
+    val chain = CorpusPipeline.qualityFilter(CorpusPipeline.repetitionFilter(
+      CorpusPipeline.gopherFilter(CorpusPipeline.languageFilter(df, cfg))), cfg)
+    val joins = chain.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.isEmpty, chain.queryExecution.optimizedPlan.treeString)
+  }
+
+  test("one run with every leg on submits no more Spark jobs than pinned") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // every ledger count but `ingested` is observed on a checkpoint the
+    // run already materialises; a recount (a .count() on a stage frame)
+    // is one more job and trips this pin. 55 is the measured count on
+    // this fixture (local[4], 4 shuffle partitions, adaptive execution
+    // on).
+    val maxJobs = 55
+    val group = s"corpus-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val dir = gateDir()
+    val cfg = CorpusPipeline.Config(blockedHosts = Set("spam.example"),
+      gopherRules = true, repetitionGate = true, encodingFix = true,
+      splitAssign = true)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "CorpusPipeline.run job pin")
+      try CorpusPipeline.run(spark, dir, gateHeldOut, cfg)
+      finally sc.clearJobGroup()
+      // the listener bus is async: poll until the count is stable
+      var last = -1
+      var spins = 0
+      while (jobs.get != last && spins < 50) {
+        last = jobs.get; spins += 1; Thread.sleep(100)
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= maxJobs, s"${jobs.get} jobs, pinned at most $maxJobs")
   }
 
   test("urlFilter: URL-less docs bypass canonical dedup instead of collapsing") {
