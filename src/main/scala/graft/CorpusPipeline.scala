@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Contamination, CurationQueries, Dedup,
@@ -35,8 +35,8 @@ import graft.sources.WarcCodec
   * so the multi-consumer fan-outs do not replay the WARC scan or the
   * LSH join, and the report's stage counts are observed on those same
   * checkpoints (`Dataset.observe`) instead of recounted. The language,
-  * Gopher, repetition and quality gates are per-document predicates
-  * evaluated in one projection behind one checkpoint.
+  * Gopher, repetition and quality gates are per-document filters
+  * chained behind one checkpoint, each observing its surviving count.
   */
 object CorpusPipeline {
 
@@ -116,13 +116,19 @@ object CorpusPipeline {
       .drop("__canon")
   }
 
+  // The per-document gates filter on predicates over the `text` column.
+  // Each predicate is built from the expressions of its oracle-checked
+  // frame operator, so the gate and the declared query cannot drift
+  // apart; doc_id is unique, so the filter keeps exactly the docs the
+  // frame's pass bit keeps.
+
   /** Gopher rule gate (x49): integer-exact rule predicates over the
     * token counts; a doc must pass every rule. Off by default — the
     * thresholds are tuned for web prose, and callers of the synthetic
     * corpus opt in per run.
     */
   private[graft] def gopherFilter(docs: DataFrame): DataFrame =
-    docs.filter(gopherKept)
+    docs.filter(CurationQueries.gopherPass(col("text")))
 
   /** Gopher REPETITION gate (x106, opt-in like [[gopherFilter]]): drop
     * documents whose top-n-gram / duplicated-n-gram character fractions
@@ -132,7 +138,7 @@ object CorpusPipeline {
     * before they move a distinct-trigram ratio).
     */
   private[graft] def repetitionFilter(docs: DataFrame): DataFrame =
-    docs.filter(repetitionKept)
+    docs.filter(CurationQueries.repetitionKeep(col("text")))
 
   /** Mojibake repair (x107, opt-in): rewrite the text column through
     * the guarded decode-encode roundtrip BEFORE language ID, the
@@ -147,54 +153,46 @@ object CorpusPipeline {
       graft.operators.EncodingRepair.fixedText(col("text")))
 
   private[graft] def languageFilter(docs: DataFrame, cfg: Config): DataFrame =
-    docs.filter(languageKept(cfg))
-
-  private[graft] def qualityFilter(docs: DataFrame, cfg: Config): DataFrame =
-    docs.filter(qualityKept(cfg))
-
-  // The per-document gate predicates over the `text` column. Each is
-  // built from the expressions of its oracle-checked frame operator, so
-  // the gate and the declared query cannot drift apart; doc_id is
-  // unique, so a filter on the predicate keeps exactly the docs the
-  // frame's pass bit keeps.
-  private def languageKept(cfg: Config): Column =
-    TextAnalysis.languageId(col("text")).isInCollection(cfg.languages)
-
-  private def gopherKept: Column = CurationQueries.gopherPass(col("text"))
-
-  private def repetitionKept: Column = CurationQueries.repetitionKeep(col("text"))
+    docs.filter(TextAnalysis.languageId(col("text")).isInCollection(cfg.languages))
 
   /** x09 score and length floor, then the x30 trigram repetition ratio
     * (`&&` skips the ratio for docs the first half already drops).
     */
-  private def qualityKept(cfg: Config): Column =
-    element_at(transform(array(TextAnalysis.qualityFeaturesOf(col("text"))), f =>
-      f.getField("n_tokens") >= cfg.minTokens &&
-        f.getField("quality") >= cfg.minQuality), 1) &&
-      PackingQueries.repetitionRatioOf(col("text")) <= cfg.maxRepetition
+  private[graft] def qualityFilter(docs: DataFrame, cfg: Config): DataFrame =
+    docs.filter(
+      element_at(transform(array(TextAnalysis.qualityFeaturesOf(col("text"))), f =>
+        f.getField("n_tokens") >= cfg.minTokens &&
+          f.getField("quality") >= cfg.minQuality), 1) &&
+        PackingQueries.repetitionRatioOf(col("text")) <= cfg.maxRepetition)
 
-  /** Stages 3-5 in one pass: the same drops as [[languageFilter]],
-    * [[gopherFilter]] (if on), [[repetitionFilter]] (if on) and
-    * [[qualityFilter]] applied in turn, in one projection and one
-    * checkpoint. `__gate` is the index of the first gate a doc fails
-    * (4 = kept); `CaseWhen` stops at the first true branch, so a later
-    * gate runs only on docs that passed the earlier ones. A predicate
-    * that is null counts as a failure, as it does under `filter`.
-    * Returns the survivors and the surviving counts observed while the
-    * checkpoint materialises: input, then after language, Gopher,
-    * repetition and quality.
+  /** Stages 3-5 in one job: [[languageFilter]], [[gopherFilter]] (if
+    * on), [[repetitionFilter]] (if on) and [[qualityFilter]] chained,
+    * with the row count observed before the first gate and after each
+    * one, and only the survivors checkpointed; the counts arrive with
+    * that checkpoint (the optimizer pushes no filter below an
+    * observation, so each count is exact). Returns the survivors and the counts: input, then
+    * after language, Gopher, repetition and quality (a gate that is off
+    * repeats the count before it).
     */
-  private[graft] def gatePass(docs: DataFrame, cfg: Config): (DataFrame, Seq[Long]) = {
-    def failed(p: Column): Column = !coalesce(p, lit(false))
-    val gate = when(failed(languageKept(cfg)), 0)
-      .when(failed(if (cfg.gopherRules) gopherKept else lit(true)), 1)
-      .when(failed(if (cfg.repetitionGate) repetitionKept else lit(true)), 2)
-      .when(failed(qualityKept(cfg)), 3)
-      .otherwise(4)
-    val (ck, counts) = CheckpointBlocks.observedCheckpoint(
-      docs.withColumn("__gate", gate),
-      count(lit(1)) +: (1 to 4).map(k => count_if(col("__gate") >= k)): _*)
-    (ck.filter(col("__gate") === 4).drop("__gate"), counts.map(_.asInstanceOf[Long]))
+  private[graft] def gates(docs: DataFrame, cfg: Config): (DataFrame, Seq[Long]) = {
+    def observed(df: DataFrame): (DataFrame, Observation) = {
+      val o = Observation()
+      (df.observe(o, count(lit(1)).as("n")), o)
+    }
+    val stages: Seq[Option[DataFrame => DataFrame]] = Seq(
+      Some(languageFilter(_, cfg)),
+      Option.when(cfg.gopherRules)(gopherFilter),
+      Option.when(cfg.repetitionGate)(repetitionFilter),
+      Some(qualityFilter(_, cfg)))
+    val (in, inObs) = observed(docs)
+    val (out, obs) = stages.foldLeft((in, Seq(inObs))) {
+      case ((df, os), Some(stage)) =>
+        val (next, o) = observed(stage(df))
+        (next, os :+ o)
+      case ((df, os), None) => (df, os :+ os.last)
+    }
+    val kept = out.localCheckpoint(true)
+    (kept, obs.map(_.get("n").asInstanceOf[Long]))
   }
 
   private[graft] def redactPii(docs: DataFrame): DataFrame = {
@@ -247,14 +245,14 @@ object CorpusPipeline {
       if (cfg.encodingFix) fixEncoding(urlKept).localCheckpoint(true)
       else urlKept
 
-    // 3-5. the per-document gates in one pass (see gatePass): language
+    // 3-5. the per-document gates in one job (see gates): language
     // filter (x08); Gopher rule gate (x49, opt-in) — after language ID,
     // the rules assume prose in a known language; Gopher repetition
     // gate (x106, opt-in) — the n-gram half of the Gopher table, next
     // to its length/symbol half; quality gates (x09 score, x30
     // repetition, length floor)
     val (qualKept, Seq(keptUrl, keptLanguage, keptGopher, keptRepetition,
-      keptQuality)) = gatePass(fixed, cfg)
+      keptQuality)) = gates(fixed, cfg)
 
     // 6. PII redaction (x36) BEFORE dedup: redaction canonicalizes text,
     // so two docs differing only in a contact line dedup together

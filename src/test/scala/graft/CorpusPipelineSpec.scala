@@ -383,6 +383,11 @@ class CorpusPipelineSpec extends SparkSpecBase {
     paraKept.join(contaminated, Seq("doc_id"), "left_anti")
   }
 
+  private lazy val docsWithNull: DataFrame =
+    (gateDocs.zipWithIndex.map { case ((u, t), i) => (s"d$i", u, "2026-01-01", t) } :+
+      (("dnull", "http://g/null", "2026-01-01", null: String)))
+      .toDF("doc_id", "url", "date", "text")
+
   private def ids(df: DataFrame): Set[String] =
     df.select("doc_id").as[String].collect().toSet
 
@@ -393,7 +398,7 @@ class CorpusPipelineSpec extends SparkSpecBase {
       CorpusPipeline.Config(gopherRules = g, repetitionGate = r, encodingFix = e)
     }
 
-  test("run's gate ledger equals the stage functions applied one at a time, across Config switches") {
+  test("run's gate ledger equals the stage functions applied one at a time, across Config switches and on null text") {
     val dir = gateDir()
     gateSwitches.foreach { cfg =>
       val r = CorpusPipeline.run(spark, dir, gateHeldOut, cfg)
@@ -412,26 +417,19 @@ class CorpusPipelineSpec extends SparkSpecBase {
       val curated = curatedOneAtATime(stages.last, cfg)
       assert(ids(r.curated) === ids(curated), label)
       assert(r.report.afterDecontamination === curated.count(), label)
-    }
-  }
 
-  test("gatePass drops a doc whose gate predicate is null, as filter does") {
-    // "und" admits the null-text and symbol-only docs past language ID,
-    // so the later gates see them: on null text their predicates are
-    // null, and without the coalesce a null would fall through the
-    // CASE WHEN to the next branch and keep the doc
-    val docs = (gateDocs.zipWithIndex.map { case ((u, t), i) =>
-      (s"d$i", u, "2026-01-01", t)
-    } :+ (("dnull", "http://g/null", "2026-01-01", null: String)))
-      .toDF("doc_id", "url", "date", "text")
-    gateSwitches.foreach { base =>
-      val cfg = base.copy(languages = Set("en", "und"))
-      val fixed = if (cfg.encodingFix) CorpusPipeline.fixEncoding(docs) else docs
-      val (kept, counts) = CorpusPipeline.gatePass(fixed, cfg)
-      val stages = gatesOneAtATime(fixed, cfg)
-      assert(counts === stages.map(_.count()), cfg.toString)
-      assert(ids(kept) === ids(stages.last), cfg.toString)
-      assert(!ids(kept).contains("dnull"), cfg.toString)
+      // null text: a WARC record cannot carry it, so this case runs
+      // `gates` on a frame. "und" admits the null-text and symbol-only
+      // docs past language ID, so the later gates see them; a null gate
+      // predicate drops the doc, as it does under the stage functions
+      val undCfg = cfg.copy(languages = Set("en", "und"))
+      val fixedWithNull =
+        if (cfg.encodingFix) CorpusPipeline.fixEncoding(docsWithNull) else docsWithNull
+      val (kept, gateCounts) = CorpusPipeline.gates(fixedWithNull, undCfg)
+      val nullStages = gatesOneAtATime(fixedWithNull, undCfg)
+      assert(gateCounts === nullStages.map(_.count()), label)
+      assert(ids(kept) === ids(nullStages.last), label)
+      assert(!ids(kept).contains("dnull"), label)
     }
   }
 
