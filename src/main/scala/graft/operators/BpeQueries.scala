@@ -326,40 +326,6 @@ object BpeQueries {
     full.take(numMerges)
   }
 
-  /** Byte-level token accounting of a doc batch under a merge table:
-    * ONE driver row (pretokens, tokens, bytes, merged_tokens) — the
-    * telemetry surface of the streaming tokenizer-maintenance leg.
-    * Scan-side over the BATCH only (pretoken vocab → byte syms → merge
-    * fold), corpus history never touched; the symbolized vocab is
-    * checkpointed before the fold (the x119g fold-over-checkpoint
-    * rule) and the folded arrays are bound in their own projection so
-    * the fold evaluates once per vocab row, not once per aggregate.
-    */
-  def byteTokenStats(docs: DataFrame, textCol: String,
-                     merges: Seq[Merge]): (Long, Long, Long, Long) = {
-    val v = pretokenVocab(docs, textCol)
-      .withColumn("syms", byteSyms(col("w")))
-      .localCheckpoint(true)
-    try {
-      val folded = merges.foldLeft(col("syms"): Column)(
-        (acc, m) => applyMerge(acc, m.l, m.r))
-      val enc = v.select(col("freq"), size(col("syms")).as("nb"),
-          folded.as("ts"))
-        .localCheckpoint(true)
-      try {
-        val r = enc.agg(
-          sum(col("freq")).as("pretokens"),
-          sum(col("freq") * size(col("ts"))).as("tokens"),
-          sum(col("freq") * col("nb")).as("bytes"),
-          sum(col("freq") *
-            size(filter(col("ts"), t => length(t) > lit(2))))
-            .as("merged")).head()
-        def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-        (g(0), g(1), g(2), g(3))
-      } finally graft.CheckpointBlocks.release(enc)
-    } finally graft.CheckpointBlocks.release(v)
-  }
-
   // --- vocab-size operating curve (x127) ----------------------------------
 
   private[graft] val CurveMerges = Seq(0, 4, 8, 16, 24)

@@ -459,10 +459,10 @@ object KnnGraph {
     */
   /** The EDGE DELTA of appending `batch` into a built graph — the new
     * nodes' top-k edges PLUS the reverse edges they induce on existing
-    * nodes — WITHOUT merging it into the stored relation. This is the
-    * streaming leg's unit of state: per-batch deltas append to an
-    * edge log and the serving graph derives by a top-k cut at read
-    * (the LSM shape), so history is never rewritten. [[appendToGraph]]
+    * nodes — WITHOUT merging it into the stored relation, so an
+    * incremental caller can append per-batch deltas to an edge log and
+    * derive the serving graph by a top-k cut at read (the LSM shape),
+    * never rewriting history. [[appendToGraph]]
     * is merge(graph, delta) for the batch caller. Returns a
     * checkpointed frame; the caller releases it.
     */
@@ -529,8 +529,7 @@ object KnnGraph {
         // BACKFILL-sized batch must not go quadratic — past the cutoff
         // the batch builds its own bounded NN-Descent graph instead
         // (≤ 4k²·|B| candidate rows per round), the same machinery the
-        // initial index build uses. The streaming leg inherits this,
-        // so a first-drain backfill of millions of docs stays linear.
+        // initial index build uses.
         val batchN = bN
         val (bgHandle, internal) =
           if (batchN <= exactInternalCutoff)
@@ -626,21 +625,6 @@ object KnnGraph {
       graft.CheckpointBlocks.release(delta)
     }
     }
-  }
-
-  /** Serving graph from an append-only edge LOG — the read path over
-    * accumulated [[appendDelta]] batches (the LSM shape: writes never
-    * rewrite history; the top-k cut happens at read). Duplicate
-    * (id, nid) observations collapse first — sims are a pure function
-    * of the vectors, so any surviving row is THE row — then each node
-    * keeps its best k by the usual (sim desc, nid) WindowGroupLimit.
-    */
-  def graphFromEdgeLog(edges: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("sim").desc, col("nid"))
-    edges.dropDuplicates("id", "nid")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id"), col("rank"), col("nid"), col("sim"))
   }
 
   /** The BEAM-WIDTH operating curve of graph-ANN serving (the x115

@@ -227,8 +227,8 @@ object Multimodal {
     * unchanged). Decodable images take the REAL pixel path — the
     * grid-pooled color-layout descriptor of [[pixelFeatures]]; every
     * other blob takes the engine's REAL text path — the hashed-TF
-    * unit-norm embedding over its UTF-8 reading, the same encoder the
-    * streaming semantic leg indexes with — at the same dimension, so
+    * unit-norm embedding over its UTF-8 reading
+    * ([[TextAnalysis.hashedTfEmbedding]]) — at the same dimension, so
     * mixed corpora stay a single total relation.
     */
   def featureExtract(spark: SparkSession, blobs: DataFrame): DataFrame =
@@ -324,11 +324,11 @@ object Multimodal {
       })
       .toDF("doc_id", "embedding", "fallback_text", "is_pixels",
         "mean_r", "mean_g", "mean_b", "n_px")
-    // non-image blobs get the engine's REAL text encoder — the same
-    // hashed-TF unit-norm embedding the streaming semantic leg indexes
-    // with (one implementation, Catalyst HOFs, codegen-friendly) —
-    // over the blob's UTF-8 text, at the pixel descriptor's dimension
-    // so the relation stays total for every Similarity consumer. A
+    // non-image blobs get the engine's REAL text encoder — the
+    // hashed-TF unit-norm embedding (one implementation, Catalyst
+    // HOFs, codegen-friendly) — over the blob's UTF-8 text, at the
+    // pixel descriptor's dimension so the relation stays total for
+    // every Similarity consumer. A
     // tokenless blob embeds as the zero vector (hashedTfEmbedding's
     // empty-input contract): "nothing to describe" is an honest
     // neighbor of nothing, where the old byte-hash placeholder

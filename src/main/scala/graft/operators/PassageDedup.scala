@@ -133,17 +133,6 @@ object PassageDedup {
                   k: Int): DataFrame =
     windowOccurrences(docs, idCol, textCol, k).select(col("w")).distinct()
 
-  /** Id-KEYED stored form of the window index: per-doc distinct window
-    * hashes. The ids let a crash-replayed ingest batch anti-join its
-    * own half-written rows back out of the index (the CorpusStream
-    * replay-idempotency contract); consumers project `w` for the
-    * membership semi-join.
-    */
-  def windowIdIndex(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int): DataFrame =
-    windowOccurrences(docs, idCol, textCol, k)
-      .select(col("id"), col("w")).distinct()
-
   /** Incremental duplicated-passage spans for a NEW batch against a
     * stored window index: a batch window is duplicated if it appears in
     * the index (history) OR at least twice within the batch itself —

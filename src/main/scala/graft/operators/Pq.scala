@@ -199,9 +199,9 @@ object Pq {
     // the same (d2, code) lexicographic minimum, and no cross-row
     // float accumulation is involved (unlike train's member sums,
     // which keep the join formulation for exactly that reason).
-    // The driver-state map may be absent on RESTORED codebooks (the
-    // streaming rotation reads committed centroid parquet back with an
-    // empty asMap) — collect the centroid relation then: it is M·Ks
+    // The driver-state map may be absent on RESTORED codebooks (one
+    // read back from centroid parquet has an empty asMap) — collect the
+    // centroid relation then: it is M·Ks
     // rows, parameter-server sized by the module contract. An empty
     // codebook (a leg trained on an empty batch) encodes nothing — the
     // old inner join against an empty centroid relation produced zero

@@ -57,71 +57,6 @@ object QualityClassifier {
         when(col(idCol) % 7 === 0, lit(" ### #! ##")).otherwise(lit("")))
         .as("t"))
 
-  /** Label-free micro-int feature surface of RAW text: (id, fq, fs,
-    * fp, fn) — the scoring-time half of [[labeledFrame]] (no
-    * augmentation, no Gopher join): a deployed model scores real
-    * documents, not the labeling fixture.
-    */
-  def featureFrame(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    TextAnalysis.qualityFeatures(docs, idCol, textCol)
-      .select(col(idCol),
-        round(col("quality") * 1e6).cast("long").as("fq"),
-        round(col("stopword_ratio") * 1e6).cast("long").as("fs"),
-        round(col("punct_ratio") * 1e6).cast("long").as("fp"),
-        (least(col("n_tokens"), lit(200)).cast("long") * lit(5000L)).as("fn"))
-
-  /** Score arbitrary documents with a trained (scaler, weights) model:
-    * (id, p6) micro probabilities — the deployable inference path (one
-    * scan-side projection; the model is a handful of literals).
-    */
-  def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
-                sc: Scaler, w: Array[Long]): DataFrame = {
-    val f = featureFrame(docs, idCol, textCol)
-    val gs = featCols.zipWithIndex.map { case (c, i) =>
-      round((col(c) - lit(sc.meanU(i))) * lit(1000000.0) / lit(sc.stdU(i)))
-        .cast("long").as(s"g${i + 1}")
-    }
-    f.select(col(f.columns.head) +: gs: _*)
-      .select(col(f.columns.head), p6Expr(w).as("p6"))
-  }
-
-  /** Labeled micro-int feature surface over RAW text — the STREAMING
-    * retrain's training set: [[featureFrame]] features joined with the
-    * Gopher pass bit computed on the same raw text as weak label (the
-    * DCLM bootstrap shape, without the x118 fixture augmentation —
-    * deployed retrains learn from the corpus as it actually arrived).
-    * Column shape matches what [[fit]] expects (id head, feature cols,
-    * y).
-    */
-  def rawLabeledFrame(docs: DataFrame, idCol: String,
-                      textCol: String): DataFrame =
-    featureFrame(docs, idCol, textCol)
-      .join(CurationQueries.gopherRules(
-          CurationQueries.gopherStats(docs, idCol, textCol))
-        .select(col(idCol), col("pass").cast("long").as("y")), Seq(idCol))
-
-  /** Covariate-shift probe for a deployed model: standardize the batch's
-    * features under the TRAIN-fit scaler and return
-    * (n, max_k |avg(g_k)|) in micro units — on the training split every
-    * avg(g_k) is ~0 by construction, so a large max means the arriving
-    * feature distribution has moved away from what the weights were fit
-    * on. ONE scan-side aggregate; no model evaluation involved.
-    */
-  def featureDriftMicro(docs: DataFrame, idCol: String, textCol: String,
-                        sc: Scaler): (Long, Long) = {
-    val f = featureFrame(docs, idCol, textCol)
-    val gs = featCols.zipWithIndex.map { case (c, i) =>
-      round((col(c) - lit(sc.meanU(i))) * lit(1000000.0) / lit(sc.stdU(i)))
-        .cast("long").as(s"g${i + 1}")
-    }
-    val r = f.select(gs: _*)
-      .agg(count(lit(1)).as("n"), avg("g1"), avg("g2"), avg("g3"), avg("g4"))
-      .head()
-    val n = r.getLong(0)
-    if (n == 0) (0L, 0L)
-    else (n, (1 to 4).map(i => math.abs(math.round(r.getDouble(i)))).max)
-  }
-
   /** Labeled micro-int training surface: (id, y, fq, fs, fp, fn).
     * Features are the x09 quality surface (already rounded 6dp — the
     * micro cast is exact) over the AUGMENTED text; the label is the

@@ -98,72 +98,11 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Multi-table LSH bucket relation (id, table, bucket) of a vector
-    * frame — the PERSISTABLE candidate-generation half of a semantic
-    * near-dup index. The hyperplanes are deterministic hash functions
-    * of (seed, dimension index), so a batch arriving months later
-    * buckets identically with no stored hyperplane state; only this
-    * relation and the (id, vec, nrm) verification relation
-    * ([[normedVecs]]) need to live in storage.
-    */
-  def lshBucketTable(vecs: DataFrame, idCol: String, vecCol: String,
-                     nbits: Int, tables: Int): DataFrame = {
-    require(tables >= 1, "tables must be >= 1")
-    val v = withNorm(vecs, idCol, vecCol)
-    dimOf(v) match {
-      case None => v.select(col("id"), lit(0).as("table"), lit(0L).as("bucket")).limit(0)
-      case Some(dim) =>
-        val signs = hyperplaneSigns(vecs.sparkSession, dim, 0 until tables * nbits)
-        bucketsFromSigns(v, signs, nbits, tables)
-          .select(col("id"), col("table"), col("bucket"))
-    }
-  }
-
-  /** The verification half of the stored semantic index: (id, vec, nrm),
-    * norms precomputed so batch-time verification never rescans to
-    * re-derive them.
+  /** (id, vec, nrm): vectors with their norms precomputed, so
+    * verification never rescans to re-derive them.
     */
   def normedVecs(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
     withNorm(vecs, idCol, vecCol)
-
-  /** Incremental cosine near-dup pairs: a NEW vector batch against a
-    * STORED index (bucket relation + normed-vector relation), plus
-    * in-batch pairs — never old-vs-old, so per-batch cost is the batch's
-    * bucket computation + one bucket-keyed join against the index (the
-    * x34 growing-corpus contract applied to embeddings). Output
-    * (a, b, sim): `b` is always a batch id; `a` is an index id
-    * (new-vs-index) or a smaller batch id (in-batch).
-    */
-  def incrementalCosinePairsFromIndex(
-      indexBuckets: DataFrame, indexVecs: DataFrame, newVecs: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      nbits: Int, tables: Int): DataFrame = {
-    val nv = withNorm(newVecs, idCol, vecCol)
-    val nb = lshBucketTable(newVecs, idCol, vecCol, nbits, tables)
-      .localCheckpoint(true)
-    val vsIndex = nb.as("y")
-      .join(indexBuckets.as("x"),
-        col("x.table") === col("y.table") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-    val inBatch = nb.as("x").join(nb.as("y"),
-        col("x.table") === col("y.table") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-    val candidates = vsIndex.unionByName(inBatch).distinct()
-    // verify: the a side may live in the index OR the batch; serve both
-    // from one union so each candidate scores exactly once
-    val allVecs = indexVecs.select(col("id"), col("vec"), col("nrm"))
-      .unionByName(nv.select(col("id"), col("vec"), col("nrm")))
-      // an id present in both (a replayed batch) must not double-score
-      .groupBy(col("id")).agg(first(col("vec")).as("vec"), first(col("nrm")).as("nrm"))
-    candidates
-      .join(allVecs.select(col("id").as("a"), col("vec").as("va"), col("nrm").as("na")), "a")
-      .join(nv.select(col("id").as("b"), col("vec").as("vb"), col("nrm").as("nb")), "b")
-      .select(col("a"), col("b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
 
   /** Brute-force cosine top-k neighbors for each query vector.
     * Deterministic: ties broken by neighbor id after rounding.

@@ -437,52 +437,6 @@ object WarcCodec {
       }
     }
 
-  /** All records of one blob with mid-stream failure tolerance: records
-    * parsed before a failure survive, and the failure itself is DROPPED
-    * here — the document leg's dead-letter channel ([[blobDocs]]) owns
-    * error reporting, so a second consumer of the same blobs must not
-    * double-report it.
-    */
-  private def safeRecords(mk: () => Iterator[WarcRecord]): Iterator[WarcRecord] =
-    new Iterator[WarcRecord] {
-      private var it: Iterator[WarcRecord] = null
-      private var pending: WarcRecord = null
-      private var finished = false
-      override def hasNext: Boolean = {
-        if (pending != null) return true
-        if (finished) return false
-        try {
-          if (it == null) it = mk()
-          if (it.hasNext) pending = it.next() else finished = true
-        } catch { case NonFatal(_) => finished = true }
-        pending != null
-      }
-      override def next(): WarcRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-    }
-
-  /** One (url, warc-date, payload bytes) row per record — the HEADER
-    * projection of a blob set, for consumers that need crawl timing and
-    * size but no payload semantics (the session leg of the streaming
-    * ingest). Every record type rides (request/response/metadata too:
-    * crawl activity is activity); payloads stream through the bounded
-    * [[RecordIterator]] without HTML extraction or charset work.
-    */
-  def fetchEventsForPaths(spark: SparkSession,
-                          paths: Dataset[String]): Dataset[(String, String, Long)] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(hadoopConfEntries(spark))
-    paths.mapPartitions { ps =>
-      val conf = confFrom(bc.value)
-      ps.flatMap { p =>
-        safeRecords(() => new RecordIterator(openPath(p, conf)))
-          .map(r => (r.url, r.date, r.body.length.toLong))
-      }
-    }
-  }
-
   /** The raw ingestion relation over a directory of WARC blobs: one row
     * per kept record plus one error row per failed blob. Fully
     * distributed and fully streaming — the binaryFile scan reads ONLY

@@ -3,7 +3,8 @@ package graft
 import graft.operators.AsOfJoin
 
 /** AsOfJoin.backward: boundary inclusion, latest-wins, left semantics
-  * for unmatched probes, and key isolation.
+  * for unmatched probes, and key isolation; and the RangeJoin bucket
+  * arithmetic edges of the other temporal join.
   */
 class AsOfJoinSpec extends SparkSpecBase {
   import spark.implicits._
@@ -42,5 +43,16 @@ class AsOfJoinSpec extends SparkSpecBase {
     val r = AsOfJoin.backward(probe, build, "k", "t").collect().head
     assert(r.getAs[String]("pa") == "a" && r.getAs[Double]("pb") == 1.5 &&
       r.getAs[String]("ba") == "x" && r.getAs[Int]("bb") == 9)
+  }
+
+  test("RangeJoin: boundary inclusion/exclusion and bucket-spanning intervals") {
+    import graft.operators.RangeJoin
+    val probe = Seq((1L, 0L), (2L, 99L), (3L, 100L), (4L, 250L), (5L, 399L), (6L, 400L))
+      .toDF("a", "t")
+    val intervals = Seq((10L, 100L, 400L)).toDF("b", "start", "end") // [100, 400)
+    val joined = RangeJoin.pointInInterval(probe, "t", intervals, "start", "end",
+        bucketWidth = 64) // interval spans buckets 1..6: no pair duplicated
+      .select("a", "b").as[(Long, Long)].collect().toSet
+    assert(joined === Set((3L, 10L), (4L, 10L), (5L, 10L)))
   }
 }

@@ -347,8 +347,8 @@ class CorpusPipelineSpec extends SparkSpecBase {
     dir
   }
 
-  /** The gates applied one stage function at a time, as `CorpusStream`
-    * and the benchmark replay run them: the frames after URL hygiene,
+  /** The gates applied one stage function at a time, as the benchmark
+    * replay runs them: the frames after URL hygiene,
     * language, Gopher, repetition and quality.
     */
   private def gatesOneAtATime(fixed: DataFrame,

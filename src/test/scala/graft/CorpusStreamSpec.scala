@@ -184,223 +184,6 @@ class CorpusStreamSpec extends SparkSpecBase {
       s2.curated.select("content_hash").as[String].collect().toSet)
   }
 
-  test("semantic leg flags shuffled-word copies the lexical dedup cannot see") {
-    val warcDir = Files.createTempDirectory("cssemw").toString
-    val workDir = Files.createTempDirectory("cssemk").toString
-    def stream() = new graft.streaming.CorpusStream(spark, workDir,
-      semanticThreshold = Some(0.9))
-
-    val a = "the quick brown fox jumps over the lazy dog and runs across the park is wide"
-    val b = "cargo ships cross deep water while cranes lift steel boxes onto the long pier and is"
-    writeWarc(warcDir, "a.warc", Seq("http://s/a" -> a, "http://s/b" -> b))
-    stream().ingest(warcDir).awaitTermination()
-    assert(stream().semanticDuplicates.count() === 0,
-      "dissimilar docs must not flag")
-
-    // c = a's words REORDERED: trigram shingles share almost nothing
-    // (passes MinHash), but the bag-of-words TF vector is identical \u2014
-    // cosine 1.0, exactly the duplicate class the semantic leg exists for
-    val c = "the lazy dog jumps over the quick brown fox and runs across the wide park is"
-    val dNew = "morning frost covers the quiet meadow and is melting where sunlight touches it"
-    writeWarc(warcDir, "b.warc", Seq("http://s/c" -> c, "http://s/d" -> dNew))
-    stream().ingest(warcDir).awaitTermination()
-
-    val s = stream()
-    assert(s.curated.count() === 4,
-      "the shuffled copy must SURVIVE lexical dedup (shingle jaccard ~0)")
-    val idOf = s.curated.select("text", "doc_id").as[(String, String)]
-      .collect().toMap
-    val flags = s.semanticDuplicates.as[(String, String, Double)].collect().toSeq
-    assert(flags.map(f => (f._1, f._2)) === Seq((idOf(a), idOf(c))),
-      s"exactly (a, c) must flag, got $flags")
-    assert(flags.head._3 >= 0.99, "identical bags of words -> cosine ~1")
-
-    // the vector index grew by every accepted doc, exactly once each
-    assert(spark.read.parquet(s"$workDir/vecs").select("id").distinct().count() === 4)
-
-    // flags survive compaction, and a post-compaction permutation of b
-    // still resolves against the compacted index
-    s.compact()
-    assert(stream().semanticDuplicates.count() === 1)
-    val b2 = "steel cranes lift long boxes onto the deep pier while cargo ships cross the water and is"
-    writeWarc(warcDir, "c.warc", Seq("http://s/b2" -> b2))
-    stream().ingest(warcDir).awaitTermination()
-    val flags2 = stream().semanticDuplicates.as[(String, String, Double)]
-      .collect().toSeq
-    assert(flags2.size === 2 && flags2.exists(f => f._1 === idOf(b)),
-      s"the post-compaction permutation must flag against b, got $flags2")
-  }
-
-  test("passage leg flags shared spans across batches; index survives compaction") {
-    val warcDir = Files.createTempDirectory("cspasw").toString
-    val workDir = Files.createTempDirectory("cspask").toString
-    def stream() = new graft.streaming.CorpusStream(spark, workDir,
-      passageK = Some(5))
-
-    // P = a 7-token passage embedded in otherwise-distinct documents
-    val P = "silver clouds drift over mountain lakes slowly"
-    val a = s"autumn winds carry leaves while the $P near valley road"
-    val b = "farmers gather wheat before storms reach the eastern fields tonight"
-    writeWarc(warcDir, "a.warc", Seq("http://p/a" -> a, "http://p/b" -> b))
-    stream().ingest(warcDir).awaitTermination()
-    assert(stream().passageSpans.count() === 0,
-      "nothing duplicated in the first batch")
-
-    // c embeds P at token positions 8..14; its trigram jaccard vs a is
-    // ~0.2 (well under the 0.7 near-dup bar), so it SURVIVES lexical
-    // dedup \u2014 passage flagging is what catches the shared span
-    val c = s"children play games beside the rivers and $P during summer"
-    val dNew = "sailors mend the canvas sails beneath harbor lights each evening"
-    writeWarc(warcDir, "b.warc", Seq("http://p/c" -> c, "http://p/d" -> dNew))
-    stream().ingest(warcDir).awaitTermination()
-
-    val s = stream()
-    assert(s.curated.count() === 4, "c must survive lexical dedup")
-    val idOf = s.curated.select("text", "doc_id").as[(String, String)]
-      .collect().toMap
-    val spans = s.passageSpans.as[(String, Long, Long, Long)].collect().toSeq
-    assert(spans === Seq((idOf(c), 8L, 14L, 7L)),
-      s"exactly c's P-span must flag, got $spans")
-    // the window index grew by every accepted doc, exactly once each
-    assert(spark.read.parquet(s"$workDir/windows")
-      .select("id").distinct().count() === 4)
-
-    // spans survive compaction; a third-batch echo of P (plus c's
-    // "and silver..." junction window) resolves against the COMPACTED
-    // index \u2014 spans [7..14], extended one token left by the junction
-    s.compact()
-    assert(stream().passageSpans.count() === 1)
-    val e = s"quiet monks copy the ancient scrolls and $P without haste"
-    writeWarc(warcDir, "c.warc", Seq("http://p/e" -> e))
-    stream().ingest(warcDir).awaitTermination()
-    val spans2 = stream().passageSpans.as[(String, Long, Long, Long)]
-      .collect().toSeq.sortBy(_._2)
-    assert(spans2.toSet === Set((idOf(c), 8L, 14L, 7L),
-      (stream().curated.filter($"text" === e)
-        .select("doc_id").as[String].head(), 7L, 14L, 8L)),
-      s"got $spans2")
-  }
-
-  test("all legs on one drain: lexical+semantic+passage dedup and sessions coexist") {
-    import graft.streaming.{CorpusStream => CS}
-    val warcDir = Files.createTempDirectory("csallw").toString
-    val workDir = Files.createTempDirectory("csallk").toString
-    def stream() = new CS(spark, workDir,
-      semanticThreshold = Some(0.9), passageK = Some(5), pqM = Some(8))
-    def drain(): Unit =
-      stream().ingestWithSessions(warcDir, sessionGapMs = 30 * 60 * 1000L,
-        sessionWatermark = "10 minutes").foreach(_.awaitTermination())
-
-    val a = "the quick brown fox jumps over the lazy dog and runs across the park is wide"
-    val b = "the committee will publish the annual budget report after the board meeting on friday morning"
-    Files.write(Paths.get(warcDir, "a.warc"),
-      recBytesAt("http://a.example/1", "2026-01-01T10:00:00Z", a) ++
-        recBytesAt("http://a.example/2", "2026-01-01T10:10:00Z", b))
-    drain()
-
-    // c = a's words reordered (semantic dup, lexically distinct);
-    // d embeds b's exact 9-token passage in otherwise-new text
-    val c = "the lazy dog jumps over the quick brown fox and runs across the wide park is"
-    val d = "council members argued for hours but the committee will publish the annual budget report after lunch"
-    Files.write(Paths.get(warcDir, "b.warc"),
-      recBytesAt("http://c.example/1", "2026-01-01T13:00:00Z", c) ++
-        recBytesAt("http://c.example/2", "2026-01-01T13:01:00Z", d))
-    drain()
-    // advancer batch: pushes the event-time watermark past host a's
-    // session close so the session leg flushes it
-    Files.write(Paths.get(warcDir, "c.warc"),
-      recBytesAt("http://e.example/1", "2026-01-01T18:00:00Z",
-        "the bakery opens early and the smell of fresh bread fills the street"))
-    drain()
-
-    val s = stream()
-    // every doc survives lexical dedup (no exact or shingle near-dups)
-    assert(s.curated.count() === 5, "all five docs are lexically distinct")
-    assert(s.quarantined.count() === 0)
-    val idOf = s.curated.select("text", "doc_id").as[(String, String)]
-      .collect().toMap
-
-    // semantic leg: exactly the (a, c) bag-of-words pair flags
-    val flags = s.semanticDuplicates.as[(String, String, Double)].collect().toSeq
-    assert(flags.map(f => (f._1, f._2)) === Seq((idOf(a), idOf(c))),
-      s"exactly (a, c) must flag semantically, got $flags")
-    assert(flags.head._3 >= 0.99)
-
-    // passage leg: d's embedded 9-token run flags against b's stored
-    // windows \u2014 and nothing else does
-    val spans = s.passageSpans.as[(String, Long, Long, Long)].collect().toSeq
-    assert(spans.map(_._1) === Seq(idOf(d)),
-      s"exactly d must carry a duplicated passage, got $spans")
-    assert(spans.head._4 === 9L,
-      s"the shared passage is 9 tokens, got ${spans.head}")
-
-    // session leg: host a's two fetches merged into one closed session
-    val closed = s.sessions
-      .select("host_hash", "fetches")
-      .as[(Long, Long)].collect().toSet
-    assert(closed.contains((CS.hostHash("a.example"), 2L)),
-      s"host a's 2-fetch session must have closed, got $closed")
-
-    // ledger accounts for every doc, with zero dedup drops
-    val led = s.ledger
-      .select("ingested", "curated_in", "exact_dropped", "near_dropped", "accepted")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    assert(led.map(_._5).sum === 5 && led.map(_._3).sum === 0 &&
-      led.map(_._4).sum === 0, s"ledger: $led")
-
-    // PQ leg: the code table covers every accepted doc with exactly M
-    // codes \u2014 codebook trained on the FIRST drain, batches from the
-    // second and third drains encoded by FRESH CorpusStream instances
-    // reloading the stored codebook (each drain() constructs a new
-    // instance over the same workDir: the restart path IS the test)
-    val codeCounts = s.pqCodes.groupBy("id").count()
-      .as[(String, Long)].collect().toMap
-    assert(codeCounts.size === 5 && codeCounts.values.forall(_ == 8L),
-      s"every doc carries exactly M=8 codes: $codeCounts")
-    // drift ledger: one telemetry row per batch, no TRUE verdict (the
-    // 2-doc training baseline is below Ks, so verdicts are null \u2014
-    // telemetry without a degenerate-baseline false alarm)
-    assert(s.pqDrift.count() === 3, s"ledger: ${s.pqDrift.collect().toSeq}")
-    assert(s.pqDrift.filter($"drifted" === true).count() === 0,
-      s"drift ledger: ${s.pqDrift.collect().toSeq}")
-
-    // streaming two-stage retrieval (the x95 contract across restarts):
-    // querying a's text must surface BOTH zero-distance members \u2014 a
-    // itself (indexed by drain 1, before any restart) and c, its
-    // bag-of-words twin (indexed by drain 2, a different stream
-    // instance) \u2014 at ranks 1-2 with exact re-ranked distance 0
-    val top = s.searchPq(Seq(("q1", a)).toDF("qid", "text"),
-        "qid", "text", k = 3)
-      .as[(String, String, Int, Double)].collect().toSeq.sortBy(_._3)
-    assert(top.take(2).map(_._2).toSet === Set(idOf(a), idOf(c)),
-      s"zero-distance members must hold ranks 1-2, got $top")
-    assert(top.take(2).forall(t => math.abs(t._4) <= 1e-6),
-      s"re-ranked distance of exact members must be 0, got $top")
-    assert(top.size === 3 && math.abs(top(2)._4) > 1e-6,
-      s"rank 3 is a genuine non-duplicate, got $top")
-
-    // FILTERED serving (the x114 discipline riding searchPq): the same
-    // query restricted to host c.example must return c ALONE at
-    // distance 0 (a, the global co-winner, is on host a.example and
-    // must not leak past the predicate); restricted to e.example the
-    // zero-distance twins vanish entirely and the bakery doc wins at a
-    // genuine nonzero distance — the result a post-shortlist filter
-    // could only produce by luck, and at high selectivity not at all
-    import org.apache.spark.sql.functions.{col => c_}
-    val onC = s.searchPq(Seq(("q1", a)).toDF("qid", "text"),
-        "qid", "text", k = 3,
-        pred = Some(c_("url").startsWith("http://c.example/")))
-      .as[(String, String, Int, Double)].collect().toSeq.sortBy(_._3)
-    assert(onC.map(_._2) === Seq(idOf(c), idOf(d)), s"got $onC")
-    assert(math.abs(onC.head._4) <= 1e-6)
-    val onE = s.searchPq(Seq(("q1", a)).toDF("qid", "text"),
-        "qid", "text", k = 3,
-        pred = Some(c_("url").startsWith("http://e.example/")))
-      .as[(String, String, Int, Double)].collect().toSeq
-    assert(onE.size === 1 && onE.head._4 > 1e-6,
-      s"only the bakery doc is on e.example, got $onE")
-  }
-
   // a WARC record with NO WARC-Target-URI header at all (some archives
   // omit it on conversion records) \u2014 url decodes as ""
   private def recBytesNoUri(text: String,
@@ -453,84 +236,6 @@ class CorpusStreamSpec extends SparkSpecBase {
       s"cross-batch dup must fall to the stored content hash, got $led2")
   }
 
-  private def recBytesAt(uri: String, date: String, text: String): Array[Byte] = {
-    val payload = text.getBytes("ISO-8859-1")
-    (s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: $uri\r\n" +
-      s"WARC-Date: $date\r\nContent-Length: ${payload.length}\r\n\r\n")
-      .getBytes("ISO-8859-1") ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-  }
-
-  test("session leg rides the ingest: out-of-order merges, watermark closes, late drops") {
-    import graft.streaming.{CorpusStream => CS}
-    val warcDir = Files.createTempDirectory("cssessw").toString
-    val workDir = Files.createTempDirectory("cssessk").toString
-    def drain(): Unit =
-      new CorpusStream(spark, workDir)
-        .ingestWithSessions(warcDir, sessionGapMs = 30 * 60 * 1000L,
-          sessionWatermark = "10 minutes")
-        .foreach(_.awaitTermination())
-
-    val tA = "the quick brown fox jumps over the lazy dog and runs in the park"
-    val tB = "the weather report says rain is coming and the wind is strong today"
-    val tC = "the children play games in the garden while the sun is warm and bright"
-    // host a: two fetches 10 min apart (one session); host b: one fetch
-    Files.write(Paths.get(warcDir, "a.warc"),
-      recBytesAt("http://a.example/1", "2026-01-01T10:00:00Z", tA) ++
-        recBytesAt("http://a.example/2", "2026-01-01T10:10:00Z", tB) ++
-        recBytesAt("http://b.example/1", "2026-01-01T10:05:00Z", tC))
-    drain()
-    // watermark after batch 1 = 10:10 - 10min = 10:00 < last+gap: open
-    val s0 = new CorpusStream(spark, workDir)
-    assert(s0.sessions.count() === 0, "no session may close before the watermark allows")
-
-    // batch 2: an OUT-OF-ORDER fetch for host a (10:05, above the 10:00
-    // watermark \u2014 must extend the open session, not start a new one) and
-    // a far-future advancer on host c
-    Files.write(Paths.get(warcDir, "b.warc"),
-      recBytesAt("http://a.example/3", "2026-01-01T10:05:00Z",
-        "the garden path curves along the stream bank under the old willow trees") ++
-        recBytesAt("http://c.example/1", "2026-01-01T13:00:00Z",
-          "the train departs the station on time and crosses the long iron bridge"))
-    drain()
-    // batch 3: another advancer so the (now 12:50) watermark's closures flush
-    Files.write(Paths.get(warcDir, "c.warc"),
-      recBytesAt("http://c.example/2", "2026-01-01T13:20:00Z",
-        "the bakery opens early and the smell of fresh bread fills the street"))
-    drain()
-
-    val s1 = new CorpusStream(spark, workDir)
-    val closed = s1.sessions
-      .select("host_hash", "session_start", "session_end", "fetches", "bytes")
-      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long, Long)]
-      .collect().map(r => (r._1, r._2.toInstant.toString, r._3.toInstant.toString,
-        r._4)).toSet
-    assert(closed.contains((CS.hostHash("a.example"),
-      "2026-01-01T10:00:00Z", "2026-01-01T10:10:00Z", 3L)),
-      s"host a's session must merge the out-of-order fetch, got: $closed")
-    assert(closed.contains((CS.hostHash("b.example"),
-      "2026-01-01T10:05:00Z", "2026-01-01T10:05:00Z", 1L)))
-
-    // batch 4: host z fetch at 10:00 \u2014 far below the 13:10 watermark.
-    // Late data must be DROPPED, never opened as a zombie session.
-    Files.write(Paths.get(warcDir, "d.warc"),
-      recBytesAt("http://z.example/1", "2026-01-01T10:00:00Z",
-        "the lighthouse keeper climbs the spiral stairs to light the lamp at dusk") ++
-        recBytesAt("http://c.example/3", "2026-01-01T16:00:00Z",
-          "the orchard rows stretch toward the hills where the cider press waits"))
-    drain()
-    // one more advancer batch: had z opened, this would close + emit it
-    Files.write(Paths.get(warcDir, "e.warc"),
-      recBytesAt("http://c.example/4", "2026-01-01T18:00:00Z",
-        "the museum hall displays ancient maps beside the carved stone tablets"))
-    drain()
-    val s2 = new CorpusStream(spark, workDir)
-    assert(!s2.sessions.select("host_hash").as[Long].collect()
-      .contains(CS.hostHash("z.example")),
-      "a fetch older than the watermark must be dropped, not sessionized")
-    // the document leg processed every batch too: all curated docs landed
-    assert(s2.curated.count() >= 8)
-  }
-
   test("encoding-repair leg: a mojibake'd re-crawl dedups against the clean page") {
     import graft.operators.EncodingRepair
     // a crawl that stored text double-encoded (UTF-8 bytes mis-decoded
@@ -570,46 +275,5 @@ class CorpusStreamSpec extends SparkSpecBase {
     sOff.ingest(warcOff).awaitTermination()
     assert(sOff.curated.count() === 2,
       "without the gate the mojibake'd copy is a distinct document")
-  }
-
-  test("export leg: shard files re-derive the ledgered manifests across batches and a restart") {
-    import graft.operators.ExportQueries
-    import org.apache.spark.sql.functions._
-    val warcDir = Files.createTempDirectory("cswarc-exp").toString
-    val workDir = Files.createTempDirectory("cswork-exp").toString
-    val nsh = 4
-    writeWarc(warcDir, "a.warc", Seq(
-      "http://x/1" -> "the harbor lights guide the evening boats back to the quiet docks",
-      "http://x/2" -> "the garden wall keeps the old roses safe from the north wind"))
-    new CorpusStream(spark, workDir, exportShards = Some(nsh))
-      .ingest(warcDir).awaitTermination()
-    writeWarc(warcDir, "b.warc", Seq(
-      "http://x/3" -> "the winter market sells warm bread beside the frozen fountain square",
-      "http://x/4" -> "the night train crosses the valley before the first light returns"))
-    // RESTART between batches: a fresh instance continues the ledger
-    val s = new CorpusStream(spark, workDir, exportShards = Some(nsh))
-    s.ingest(warcDir).awaitTermination()
-
-    // trainer-side re-derivation from the SHIPPED FILES must equal the
-    // cumulative ledger (per-shard: counts/tokens sum, ids min/max,
-    // checksums xor \u2014 xor associativity is why the manifest uses it)
-    val fromFiles = ExportQueries.manifest(
-        ExportQueries.shardAssign(s.exportedDocs.select("doc_id", "text"), nsh))
-      .collect().toSeq
-    val fromLedger = s.exportManifests.groupBy(col("shard"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-        min(col("min_doc")).as("min_doc"), max(col("max_doc")).as("max_doc"),
-        expr("bit_xor(checksum)").as("checksum"))
-      .orderBy(col("shard")).collect().toSeq
-    assert(fromFiles === fromLedger,
-      s"shipped files must re-derive the ledger:\n$fromFiles\nvs\n$fromLedger")
-    // and both equal the manifest over the curated store \u2014 export can
-    // never disagree with the corpus state about membership
-    val fromCurated = ExportQueries.manifest(
-        ExportQueries.shardAssign(s.curated.select("doc_id", "text"), nsh))
-      .collect().toSeq
-    assert(fromFiles === fromCurated)
-    assert(s.exportManifests.select("batch_id").distinct().count() === 2,
-      "both batches ledgered")
   }
 }

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-/** compact()'s safety rails: the uncommitted-batch detector must not
+/** compact()'s safety rail: the uncommitted-batch detector must not
   * silently degrade to "safe" when there is no stream checkpoint to
-  * read, and the codebook-version GC must reclaim rotations older than
-  * current-1 (the only versions serving and crash replay can read).
+  * read.
   */
 class CompactGuardSpec extends graft.SparkSpecBase {
   import spark.implicits._
@@ -15,34 +14,22 @@ class CompactGuardSpec extends graft.SparkSpecBase {
     new CorpusStream(spark, workDir).compact()
   }
 
-  test("batch dirs without a checkpoint require explicit acknowledgment; GC sweeps old codebooks") {
+  test("batch dirs without a checkpoint require explicit acknowledgment") {
     val workDir = Files.createTempDirectory("cgack").toString
-    val s = new CorpusStream(spark, workDir,
-      semanticThreshold = Some(0.95), pqM = Some(8))
-    // fabricate processBatch-written state: a curated batch dir, a
-    // version ledger through v=2, and three codebook version dirs
+    val s = new CorpusStream(spark, workDir)
+    // fabricate processBatch-written state: a curated batch dir
     Seq(("d1", "http://a/1", "2026-01-01", "text one", "h1"))
       .toDF("doc_id", "url", "date", "text", "content_hash")
       .write.parquet(s"$workDir/curated/batch=0")
-    Seq((0L, 1.0, 100L, 0L), (1L, 1.1, 120L, 4L), (2L, 1.2, 140L, 9L))
-      .toDF("version", "train_err_sum", "train_n", "batch_id")
-      .write.parquet(s"$workDir/pqmeta/batch=9")
-    (0 to 2).foreach { v =>
-      Seq((1, 1, Array(0.0))).toDF("m", "code", "cvec")
-        .write.parquet(s"$workDir/pqcodebook/v=$v")
-    }
     // no chk dir: the detector cannot verify commit state — refuse
     val e = intercept[IllegalArgumentException](s.compact())
     assert(e.getMessage.contains("acknowledgeNoCheckpoint"))
     assert(new java.io.File(s"$workDir/curated/batch=0").isDirectory,
       "a refused compact must not have touched state")
-    // the caller vouches every batch completed: compaction proceeds and
-    // the GC keeps only v=1 (replay of the v=2 rotation) and v=2
+    // the caller vouches every batch completed: compaction proceeds
     s.compact(acknowledgeNoCheckpoint = true)
-    assert(!new java.io.File(s"$workDir/pqcodebook/v=0").exists(),
-      "versions older than current-1 must be reclaimed")
-    assert(new java.io.File(s"$workDir/pqcodebook/v=1").isDirectory)
-    assert(new java.io.File(s"$workDir/pqcodebook/v=2").isDirectory)
+    assert(new java.io.File(s"$workDir/curated/base=0").isDirectory,
+      "the batch dir must fold into the base")
     assert(s.curated.count() === 1, "compaction preserved the state")
   }
 }
