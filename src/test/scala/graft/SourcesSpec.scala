@@ -149,4 +149,24 @@ class SourcesSpec extends SparkSpecBase {
     assert(batches.filter(_._1 == "r2") === Seq(("r2", 1, 1, 10)))
     assert(batches.filter(_._1 == "r3") === Seq(("r3", 1, 1, 1)))
   }
+
+  test("Batcher.pageRanges covers every page exactly once, in numbered order") {
+    val releases = (1 to 25).map(n => (s"r$n", n)).toDF("id", "page_count")
+    (1 to 7).foreach { size =>
+      val byId = Batcher.pageRanges(releases, size)
+        .select("id", "batch_number", "start_page_num", "end_page_num")
+        .as[(String, Int, Int, Int)].collect().groupBy(_._1)
+      (1 to 25).foreach { n =>
+        val bs = byId(s"r$n").toSeq.sortBy(_._2)
+        assert(bs.map(_._2) === (1 to (n + size - 1) / size), s"pages $n, size $size")
+        assert(bs.flatMap(b => b._3 to b._4) === (1 to n), s"pages $n, size $size")
+        assert(bs.forall(b => b._4 - b._3 < size))
+      }
+    }
+  }
+
+  test("Batcher.pageRanges refuses a non-positive batch size") {
+    val releases = Seq(("r1", 3)).toDF("id", "page_count")
+    Seq(0, -1).foreach(s => intercept[IllegalArgumentException](Batcher.pageRanges(releases, s)))
+  }
 }

@@ -96,6 +96,63 @@ class WarcStreamSpec extends SparkSpecBase {
     assert(right === Seq("http://r2", "http://r3", "http://r4"))
   }
 
+  /** A gzip member with every optional header field (FEXTRA, FNAME,
+    * FCOMMENT and a valid FHCRC), which `GZIPOutputStream` never writes.
+    */
+  private def flaggedMemberOf(b: Array[Byte]): Array[Byte] = {
+    def le(v: Long, n: Int) = Array.tabulate[Byte](n)(i => ((v >>> (8 * i)) & 0xFF).toByte)
+    val extra = "XY".getBytes("ISO-8859-1") ++ le(3, 2) ++ Array[Byte](7, 8, 9)
+    val head = Array[Byte](0x1F, 0x8B.toByte, 8, 0x1E, 0, 0, 0, 0, 0, 0xFF.toByte) ++
+      le(extra.length, 2) ++ extra ++
+      "rec.warc\u0000".getBytes("ISO-8859-1") ++ "a comment\u0000".getBytes("ISO-8859-1")
+    val hcrc = new java.util.zip.CRC32(); hcrc.update(head)
+    val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    deflater.setInput(b); deflater.finish()
+    val body = new ByteArrayOutputStream()
+    val chunk = new Array[Byte](1 << 12)
+    while (!deflater.finished()) body.write(chunk, 0, deflater.deflate(chunk))
+    deflater.end()
+    val crc = new java.util.zip.CRC32(); crc.update(b)
+    head ++ le(hcrc.getValue, 2) ++ body.toByteArray ++ le(crc.getValue, 4) ++ le(b.length, 4)
+  }
+
+  test("member offsets walk FEXTRA, FNAME, FCOMMENT and FHCRC headers") {
+    val first = flaggedMemberOf(
+      recBytes("response", "http://f0", "flagged".getBytes("ISO-8859-1")))
+    val second = memberOf(recBytes("response", "http://f1", "plain".getBytes("ISO-8859-1")))
+    val blob = first ++ second
+    assert(WarcCodec.gzipMemberOffsets(new ByteArrayInputStream(blob)) ===
+      Seq(0L, first.length.toLong))
+    def open() = new ByteArrayInputStream(blob)
+    assert(WarcCodec.recordsInRange(() => open(), 0L, first.length.toLong)
+      .map(_.url).toSeq === Seq("http://f0"))
+    assert(WarcCodec.recordsInRange(() => open(), first.length.toLong, blob.length.toLong)
+      .map(_.url).toSeq === Seq("http://f1"))
+  }
+
+  test("a truncated gzip member fails planning instead of yielding a short offset list") {
+    val member = memberOf(recBytes("response", "http://t", ("x" * 4000).getBytes("ISO-8859-1")))
+    Seq(3, member.length / 2).foreach { cut =>
+      intercept[java.io.EOFException](
+        WarcCodec.gzipMemberOffsets(new ByteArrayInputStream(member.dropRight(cut))))
+    }
+  }
+
+  test("bytes after a member that are not gzip fail planning at their offset") {
+    val member = memberOf(recBytes("response", "http://g", "y".getBytes("ISO-8859-1")))
+    val e = intercept[java.io.EOFException](WarcCodec.gzipMemberOffsets(
+      new ByteArrayInputStream(member ++ "junk".getBytes("ISO-8859-1"))))
+    assert(e.getMessage.contains(s"offset ${member.length}"))
+  }
+
+  test("a gzip member with a non-deflate compression method is refused") {
+    val member = memberOf(recBytes("response", "http://m", "z".getBytes("ISO-8859-1")))
+    val bad = member.clone(); bad(2) = 7
+    val e = intercept[java.io.EOFException](
+      WarcCodec.gzipMemberOffsets(new ByteArrayInputStream(bad)))
+    assert(e.getMessage.contains("compression method"))
+  }
+
   test("non-gzip blob yields a single unsplittable pseudo-member") {
     val plain = recBytes("response", "http://p", "x".getBytes("ISO-8859-1"))
     assert(WarcCodec.gzipMemberOffsets(new ByteArrayInputStream(plain)) === Seq(0L))
