@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sort.)
   *
   * This complements [[graft.sinks.TableStore]]: TableStore's explicit
-  * `b%d` directories serve point-lookup pruning and surgical bucket
-  * rewrites (upsert/delete); this layout serves repeated large-scale
+  * `bNNNN` directories serve surgical bucket rewrites (its one
+  * `merge`); this layout serves repeated large-scale
   * joins through the session catalog.
   */
 object CoLocatedJoin {

@@ -1,131 +1,107 @@
 package graft.sinks
 
-import java.io.File
+import java.io.{File, PrintWriter}
+import java.nio.file.{Files, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import graft.CheckpointBlocks
 
 /** Keyed-table sink semantics of the reference repository layer
-  * (supabase_repository.py:37-71 + supabase_schema.sql FK cascades),
-  * re-expressed over parquet table directories.
+  * (supabase_repository.py:37-71 + supabase_schema.sql FK cascades) over
+  * parquet. No Delta or Iceberg jar is available offline (SURVEY §7.6),
+  * so a table is their log cut down to one file: `bNNNN` bucket dirs
+  * (bucket = pmod(hash(key), n)) and a `_manifest` recording the bucket
+  * key and count, the schema, a version and each bucket's live files.
   *
-  * There is no Delta in the offline jar set (SURVEY §7.6), so MERGE is
-  * implemented over ONE layout, used by every table: a directory of
-  * `bNNNN` bucket subdirectories (bucket = pmod(hash(key), N), N recorded
-  * in a `_graft_buckets` marker at creation). An upsert rewrites ONLY the
-  * buckets containing batch keys — an upsert of a 10k-row batch into a
-  * huge table reads and rewrites just the collided buckets; every other
-  * bucket's files are untouched (byte-identical, asserted in
-  * TableStoreSpec). At 1000-executor scale bucket count is sized so a
-  * bucket is a few GB; the merge job for all affected buckets is ONE
-  * Spark job (partitionBy on the bucket id), not a per-bucket loop.
-  * `append` keeps the same layout with N = 1: its rows land in `b0000`,
-  * so upsert, lookup and deleteCascade work on appended tables unchanged
-  * (pmod(hash, 1) = 0).
-  *
-  * Writes are crash-safe per bucket: new data lands in a staging dir,
-  * then live→.bak, staging→live, drop .bak — a failure at any step
-  * leaves a recoverable copy (the reference's transactional UPSERT
-  * analog). Renames assume a single filesystem (local/HDFS-style); on
-  * object stores swap via a manifest instead.
-  *
-  * All operations are idempotent: re-running an upsert of the same batch
-  * yields an identical table (the OP-61 at-least-once retry model stays
-  * exactly-once-effective), and an empty input is a no-op that writes
-  * nothing, so callers need no emptiness guard of their own.
+  * Every write is one [[merge]]: remove rows by a key set, add rows. It
+  * rewrites only the touched buckets, all in ONE partitionBy job, moves
+  * the new files into their bucket dirs, and commits by renaming a new
+  * manifest (version N+1) over the old one; other buckets' files stay
+  * byte-identical. The recovery rule ([[recover]]) runs before every
+  * read and write, so a crash leaves version N or N+1 and the retry
+  * converges. Renames assume one filesystem (local/HDFS-style). Writes
+  * are idempotent under the OP-61 at-least-once replay, and an empty
+  * input writes nothing.
   */
 object TableStore {
 
-  /** Default bucket count for new tables. Production sizing: total table
-    * bytes / target bucket size (a few GB); must be fixed at creation.
+  /** Buckets of a keyed table, fixed at creation; production sizing is
+    * table bytes / a few GB. A table created without a key has one.
     */
-  val DefaultBuckets = 16
+  private val DefaultBuckets = 16
 
-  private val BucketMarker = "_graft_buckets"
+  private val ManifestName = "_manifest"
+  private val PendingName = "_manifest.pending"
+  private val StagingName = "_staging"
+
+  /** One committed table version; `files` holds the non-empty buckets. */
+  private final case class Manifest(version: Long, key: String, buckets: Int,
+                                    schema: StructType, files: Map[Int, Seq[String]]) {
+    def render: String =
+      (Seq(s"version\t$version", s"key\t$key", s"buckets\t$buckets", s"schema\t${schema.json}") ++
+        files.toSeq.sortBy(_._1).flatMap { case (b, fs) => fs.map(f => s"file\t$b\t$f") })
+        .mkString("", "\n", "\n")
+  }
+
+  private def parse(lines: Seq[String]): Manifest = {
+    val rows = lines.map(_.split("\t", -1).toSeq)
+    def field(name: String): String = rows.collectFirst { case Seq(`name`, v) => v }
+      .getOrElse(throw new IllegalStateException(s"manifest has no $name line"))
+    Manifest(field("version").toLong, field("key"), field("buckets").toInt,
+      DataType.fromJson(field("schema")).asInstanceOf[StructType],
+      rows.collect { case Seq("file", b, f) => b.toInt -> f }.groupMap(_._1)(_._2))
+  }
 
   private def bucketName(b: Int): String = f"b$b%04d"
 
-  private def bucketDirs(path: String): Seq[File] =
-    Option(new File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-      .sortBy(_.getName)
-
-  /** Declared bucket count of an existing bucketed table, if any. Read
-    * from the marker, NOT from the number of bucket dirs present — empty
-    * buckets have no directory, and merging with the wrong modulus would
-    * silently duplicate keys.
-    */
-  private def declaredBuckets(path: String): Option[Int] = {
-    val f = new File(path, BucketMarker)
-    if (f.exists()) Some(new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toInt)
-    else None
-  }
-
-  private def bucketExpr(key: String, n: Int): Column = pmod(hash(col(key)), lit(n))
-
-  /** Swap-in-progress marker of an upsert: present => the staged
-    * buckets are authoritative (roll FORWARD on recovery).
-    */
-  private val SwapMarker = "_graft_swap"
-
-  /** Crash recovery, run before every read or rewrite. Heals, in order:
-    *  - orphaned per-bucket backups (`bNNNN.bak`): a crash between
-    *    swapIn's backup and promote steps leaves the ONLY copy of the
-    *    bucket in `.bak`, which no read path consults — restore it
-    *    (promote never happened) or drop it (live exists => promote
-    *    completed, only the cleanup was lost);
-    *  - an interrupted upsert swap: with the [[SwapMarker]] present,
-    *    promote the remaining staged buckets and drop the staging dir.
-    */
-  private def recover(path: String): Unit = {
-    Option(new File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+\\.bak"))
-      .foreach { bak =>
-        val live = new File(path, bak.getName.stripSuffix(".bak"))
-        if (live.exists()) deleteRec(bak)
-        else require(bak.renameTo(live), s"recover: restore failed for $bak")
-      }
-    val marker = new File(path, SwapMarker)
-    if (marker.exists()) {
-      val staging = new File(path + ".staging")
-      Option(staging.listFiles()).toSeq.flatten
-        .filter(d => d.isDirectory && d.getName.startsWith("__b="))
-        .foreach { part =>
-          val b = part.getName.stripPrefix("__b=").toInt
-          swapIn(part, new File(path, bucketName(b)))
-        }
-      deleteRec(staging)
-      val _ = marker.delete()
-    }
-  }
-
-  /** Read a table: every bucket dir, or None if the table has none. */
-  def read(spark: SparkSession, path: String): Option[DataFrame] = {
-    recover(path)
-    val parts = bucketDirs(path).map(_.getPath)
-    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
-  }
+  private def dirs(path: String, buckets: Iterable[Int]): Seq[String] =
+    buckets.toSeq.sorted.map(b => new File(path, bucketName(b)).getPath)
 
   private def deleteRec(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
     val _ = f.delete()
   }
 
-  /** Crash-safe directory swap: live→.bak, staging→live, drop .bak.
-    * A failure between steps always leaves either live or .bak intact.
+  /** The one recovery rule: delete every file in a bucket dir that the
+    * manifest does not name (from a merge that crashed before or after
+    * its rename), empty bucket dirs, and any pending manifest or staging
+    * dir. Returns the manifest; None for an absent table. Bucket dirs
+    * with neither manifest come from the store before it kept one; the
+    * rule would delete their rows, so the table is refused (no migration).
     */
-  private def swapIn(staging: File, live: File): Unit = {
-    val bak = new File(live.getPath + ".bak")
-    if (bak.exists()) deleteRec(bak)
-    if (live.exists()) require(live.renameTo(bak), s"swap: backup failed for $live")
-    require(staging.renameTo(live), s"swap: promote failed for $live")
-    if (bak.exists()) deleteRec(bak)
+  private def recover(path: String): Option[Manifest] = {
+    val committed = new File(path, ManifestName)
+    val pending = new File(path, PendingName)
+    val buckets = Option(new File(path).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
+    if (!committed.exists() && !pending.exists() && buckets.nonEmpty)
+      throw new IllegalStateException(s"$path has bucket dirs but no $ManifestName: it was " +
+        "written by the pre-manifest store, which has no migration; rebuild it from its source")
+    val m = Option.when(committed.exists())(parse(Files.readAllLines(committed.toPath).asScala.toSeq))
+    Seq(pending, new File(path, StagingName)).foreach(deleteRec)
+    buckets.foreach { d =>
+      val live = m.flatMap(_.files.get(d.getName.drop(1).toInt)).getOrElse(Nil).toSet
+      d.listFiles().filterNot(f => live(f.getName)).foreach(deleteRec)
+      if (live.isEmpty) deleteRec(d)
+    }
+    m
   }
 
-  /** Deterministic batch-internal dedup, keep-LAST: the reference sends
-    * chunks sequentially and its later chunk wins (UPSERT ... ON CONFLICT
-    * DO UPDATE, supabase_repository.py:59-65). With no ingest-order
-    * column on the batch, "last" is resolved by DESCENDING all-column
-    * order — deterministic and permutation-independent.
+  /** Read a table: its live bucket dirs, or None if it has no rows. The
+    * schema comes from the manifest, so a read runs no Spark job.
+    */
+  def read(spark: SparkSession, path: String): Option[DataFrame] =
+    recover(path).filter(_.files.nonEmpty)
+      .map(m => spark.read.schema(m.schema).parquet(dirs(path, m.files.keys): _*))
+
+  /** Batch-internal dedup, keep-LAST: the reference's later chunk wins
+    * (UPSERT ... ON CONFLICT DO UPDATE, supabase_repository.py:59-65);
+    * "last" is the DESCENDING all-column order, permutation-independent.
     */
   private[sinks] def dedupeKeepLast(batch: DataFrame, key: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -135,183 +111,126 @@ object TableStore {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Working column names the store claims for itself: a user column
-    * with one of these names would be silently overwritten (and, for
-    * __b, stripped by partitionBy) — refuse up front instead.
+  /** Working column names: a user column so named would be silently
+    * overwritten (or, for __b, stripped by partitionBy), so it is refused.
     */
   private val Reserved = Set("__b", "__k", "__rn")
-  private def requireUnreserved(df: DataFrame, op: String): Unit = {
+  private def requireUnreserved(df: DataFrame): Unit = {
     val clash = df.columns.filter(Reserved)
-    require(clash.isEmpty,
-      s"$op: column name(s) ${clash.mkString(", ")} are reserved by TableStore")
+    require(clash.isEmpty, s"column name(s) ${clash.mkString(", ")} are reserved by TableStore")
   }
 
-  /** Creates the table dir and its bucket-count marker if absent. Runs
-    * BEFORE any bucket lands: a crash after buckets land but before the
-    * marker would let a later upsert merge with a different default
-    * modulus and silently duplicate keys.
+  /** `df`, checkpointed before any file changes unless it deterministically
+    * reads only checkpoints and local rows: it may read the table being
+    * rewritten, and its rows must hash alike in the touched job and the write.
     */
-  private def declare(path: String, n: Int): Unit = {
-    val marker = new File(path, BucketMarker)
-    if (!marker.exists()) {
-      new File(path).mkdirs()
-      val _ = java.nio.file.Files.write(marker.toPath, n.toString.getBytes("UTF-8"))
+  private def pinned(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val inMemory = plan.collectLeaves().forall {
+      case _: LogicalRDD | _: LocalRelation => true
+      case _ => false
     }
+    if (inMemory && plan.deterministic) df else CheckpointBlocks.cleanCheckpoint(df)
   }
 
-  /** OP-11: bulk upsert — new rows win on key collision. Only buckets
-    * containing batch keys are rewritten.
+  /** The store's one write: in the table at `path`, bucketed on `key`
+    * (16 buckets when new; an existing one-bucket table takes any key),
+    * delete the rows whose `remove._1` column is in `remove._2`'s column
+    * of that name (null-safe `<=>`), then add the rows of `add`. Touched
+    * buckets are the added rows' and those holding removed rows: from the
+    * hash when `remove._1` is the key, else from one column-pruned scan.
     */
-  def upsert(batch: DataFrame, path: String, key: String,
-             numBuckets: Int = DefaultBuckets): Unit = {
-    val spark = batch.sparkSession
-    requireUnreserved(batch, "upsert")
-    val deduped = dedupeKeepLast(batch, key).localCheckpoint(true)
-    if (deduped.isEmpty) return
-    recover(path)
-    val n = declaredBuckets(path).getOrElse(numBuckets)
-    val withB = deduped.withColumn("__b", bucketExpr(key, n))
-    val affected = withB.select("__b").distinct().collect().map(_.getInt(0)).toSeq.sorted
+  def merge(path: String, key: String,
+            remove: Option[(String, DataFrame)], add: Option[DataFrame]): Unit =
+    commit(path, Some(key), remove, add, chunkRows = 0)
 
-    // existing rows of the affected buckets, batch keys removed
-    val existingParts =
-      affected.map(b => new File(path, bucketName(b))).filter(_.exists()).map(_.getPath)
-    // null-safe key equality: with plain ===, an existing null-key row
-    // never matches the anti-join and a new null-key row is APPENDED on
-    // every upsert — unbounded duplicates instead of replacement
-    val keep = if (existingParts.isEmpty) withB.limit(0) else
-      spark.read.parquet(existingParts: _*)
-        .join(broadcast(deduped.select(col(key).as("__k"))),
-          col(key) <=> col("__k"), "left_anti")
-        .withColumn("__b", bucketExpr(key, n))
+  /** [[merge]], on the table's own key when `key` is None; `chunkRows` > 0
+    * bounds rows per output file.
+    */
+  private def commit(path: String, key: Option[String], remove: Option[(String, DataFrame)],
+                     add: Option[DataFrame], chunkRows: Int): Unit = {
+    add.foreach(requireUnreserved)
+    val before = recover(path)
+    if (add.isEmpty && (before.isEmpty || remove.isEmpty)) return
+    val rows = add.map(pinned)
+    val gone = remove.map { case (c, keys) => c -> pinned(keys.select(col(c).as("__k"))).distinct() }
+    val spark = (rows ++ gone.map(_._2)).head.sparkSession
+    val m = before.getOrElse(Manifest(0, key.getOrElse(""),
+      if (key.isDefined) DefaultBuckets else 1, rows.get.schema, Map.empty))
+    key.foreach(k => require(m.buckets == 1 || k == m.key, s"merge: $path is bucketed on ${m.key}, not $k"))
+    def bucketOf(c: Column): Column =
+      if (m.buckets == 1) lit(0) else pmod(hash(c.cast(m.schema(m.key).dataType)), lit(m.buckets))
+    def table(buckets: Iterable[Int]): DataFrame =
+      spark.read.schema(m.schema).parquet(dirs(path, buckets): _*)
+    val live = m.files.keySet
 
-    // ONE job writes every affected bucket via partitionBy, then each
-    // bucket dir is swapped in individually (crash-safe per bucket);
-    // the swap marker makes recovery roll forward from here on
-    val staging = new File(path + ".staging")
-    if (staging.exists()) deleteRec(staging)
-    keep.unionByName(withB)
-      .write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(staging.getPath)
-    declare(path, n)
-    java.nio.file.Files.write(new File(path, SwapMarker).toPath, Array.emptyByteArray)
-    affected.foreach { b =>
-      val part = new File(staging, s"__b=$b")
-      if (part.exists()) swapIn(part, new File(path, bucketName(b)))
-      else { // bucket emptied (or never existed): remove stale dir if present
-        val live = new File(path, bucketName(b))
-        if (live.exists()) deleteRec(live)
-      }
+    val removedFrom = gone.filter(_ => live.nonEmpty).map { case (c, k) =>
+      if (c == m.key) k.select(bucketOf(col("__k")).as("__b")).filter(col("__b").isin(live.toSeq: _*))
+      else table(live).select(col(c)).join(broadcast(k), col(c) <=> col("__k"), "left_semi")
+        .select(regexp_extract(input_file_name(), "/b(\\d+)/[^/]*$", 1).cast("int"))
     }
-    deleteRec(staging)
-    val _ = new File(path, SwapMarker).delete()
-  }
+    val touched = (rows.map(_.select(bucketOf(col(m.key)))) ++ removedFrom)
+      .reduceOption(_ union _).fold(Set.empty[Int])(_.distinct().collect().map(_.getInt(0)).toSet)
+    if (touched.isEmpty) return
 
-  /** OP-08 at scale: point lookup by the table's bucket key. Reads ONE
-    * bucket directory — the one `pmod(hash(value), n)` selects — instead
-    * of scanning the table: on a thousand-bucket production table this
-    * is a thousandth of the IO. The hash is evaluated through the same
-    * Catalyst expression the writer used, so reader and writer can never
-    * disagree.
-    */
-  def lookup(spark: SparkSession, path: String, key: String, value: Any): Option[DataFrame] =
-    for (whole <- read(spark, path); n <- declaredBuckets(path)) yield {
-      // cast the literal to the key's table type before hashing:
-      // hash(int 42) != hash(long 42), and a width mismatch would
-      // silently probe the wrong bucket
-      val lv = lit(value).cast(whole.schema(key).dataType)
-      val b = spark.range(1).select(pmod(hash(lv), lit(n)).as("b")).head().getInt(0)
-      val part = new File(path, bucketName(b))
-      if (part.exists()) spark.read.parquet(part.getPath).filter(col(key) === lv)
-      else whole.limit(0)
+    val kept = Option.when((live & touched).nonEmpty)(table(live & touched)).map(t =>
+      gone.fold(t) { case (c, k) => t.join(broadcast(k), col(c) <=> col("__k"), "left_anti") })
+    // one task per bucket, so a rewrite leaves one file per bucket
+    val next = (kept ++ rows).reduce(_ unionByName _).withColumn("__b", bucketOf(col(m.key)))
+      .repartition(col("__b"))
+    val staging = new File(path, StagingName)
+    val w = next.write.partitionBy("__b").mode(SaveMode.Overwrite)
+    (if (chunkRows > 0) w.option("maxRecordsPerFile", chunkRows.toLong) else w).parquet(staging.getPath)
+
+    val written = Option(staging.listFiles()).toSeq.flatten.filter(_.getName.startsWith("__b="))
+      .map(d => d.getName.stripPrefix("__b=").toInt ->
+        d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq).toMap
+    // rows outside the touched buckets would replace files never read
+    require(written.keySet.subsetOf(touched), s"merge: $path wrote untouched buckets")
+    val pending = new File(path, PendingName)
+    Using.resource(new PrintWriter(pending, "UTF-8"))(_.print(Manifest(m.version + 1, m.key,
+      m.buckets, StructType(next.schema.filterNot(_.name == "__b")), m.files -- touched ++ written).render))
+    written.foreach { case (b, fs) =>
+      val dir = new File(path, bucketName(b))
+      dir.mkdirs()
+      fs.foreach(f => Files.move(new File(staging, s"__b=$b/$f").toPath, new File(dir, f).toPath))
     }
-
-  /** OP-12 + OP-44: append-only chunked insert into a one-bucket table
-    * (created on first use): rows land in `b0000`, so the table stays in
-    * the one layout every other operation reads. `chunkRows` bounds rows
-    * per output file (the reference's DB_BULK_SIZE=500 write batching,
-    * supabase_repository.py:67-71 + constants.py:56); 0 = no bound. A
-    * table declared with more buckets is refused: unbucketed rows there
-    * would break the key-to-bucket invariant upsert and lookup rely on.
-    * The empty check evaluates `batch` once more — pass a materialized
-    * frame when it is costly to compute.
-    */
-  def append(batch: DataFrame, path: String, chunkRows: Int = 0): Unit = {
-    requireUnreserved(batch, "append")
-    recover(path)
-    declaredBuckets(path).foreach(n => require(n == 1,
-      s"append: $path is declared with $n buckets; append extends one-bucket tables only"))
-    if (batch.isEmpty) return
-    declare(path, 1)
-    val w = if (chunkRows > 0)
-      batch.write.option("maxRecordsPerFile", chunkRows.toLong)
-    else batch.write
-    w.mode(SaveMode.Append).parquet(new File(path, bucketName(0)).getPath)
+    Files.move(pending.toPath, new File(path, ManifestName).toPath, StandardCopyOption.ATOMIC_MOVE)
+    val _ = recover(path)
   }
+
+  /** OP-11: bulk upsert — new rows win on key collision; duplicate keys
+    * in the batch keep the last row ([[dedupeKeepLast]]).
+    */
+  def upsert(batch: DataFrame, path: String, key: String): Unit = {
+    requireUnreserved(batch)
+    val rows = CheckpointBlocks.cleanCheckpoint(dedupeKeepLast(batch, key))
+    merge(path, key, Some(key -> rows), Some(rows))
+  }
+
+  /** OP-12 + OP-44: append-only insert into the buckets of the table's
+    * key (a table created here has no key and one bucket). `chunkRows`
+    * bounds rows per output file (the reference's DB_BULK_SIZE=500,
+    * supabase_repository.py:67-71 + constants.py:56); 0 = no bound.
+    */
+  def append(batch: DataFrame, path: String, chunkRows: Int = 0): Unit =
+    commit(path, None, None, Some(batch), chunkRows)
 
   /** OP-13 + OP-29: delete parent rows by key with explicit cascade to
-    * child tables (Spark has no FK cascades — each child is rewritten
-    * with an anti-join on its FK). Only buckets that actually contain
-    * matching rows are rewritten; the rest keep their files untouched.
-    *
-    * The delete key is often NOT the table's bucket key (record is
-    * bucketed by nca_number but cascaded on release_id), so affected
-    * buckets can't be derived from key hashes. Instead each row's bucket
-    * is recovered from its file path: ONE semi-join job finds the
-    * affected bucket set, ONE partitionBy job rewrites exactly those
-    * buckets — O(1) Spark jobs per table regardless of bucket count
-    * (the round-2 per-bucket isEmpty/replace driver loop was a
-    * driver-side bottleneck at production bucket counts).
+    * child tables, one merge per table removing by its FK column; a null
+    * key matches nothing, as in SQL. CHILDREN FIRST (reverse FK order): a
+    * crash between tables leaves the parent row, so the caller's retry
+    * re-detects the condition and re-runs the cascade. Parent-first would
+    * strand orphaned child rows: with the parent gone, CDC classifies the
+    * release as "new" and the cascade never re-fires.
     */
   def deleteCascade(spark: SparkSession, keys: DataFrame, keyCol: String,
                     parent: (String, String),
                     children: Seq[(String, String)] = Nil): Unit = {
-    // localCheckpoint cuts lineage: the caller's keys may derive from the
-    // very tables being rewritten — without materialization, the second
-    // table's anti-join would recompute keys against already-swapped files
-    val k = keys.select(col(keyCol).as("__k")).distinct().localCheckpoint(true)
-    if (k.isEmpty) return
-    // CHILDREN FIRST (reverse FK order, like SQL cascades): a crash
-    // between tables then leaves the parent row in place, so the
-    // caller's retry re-detects the condition and re-runs the cascade.
-    // Parent-first would strand orphaned child rows forever — with the
-    // parent gone, CDC classifies the release as "new" and the cascade
-    // never re-fires.
+    // pinned once: a child's rewrite must not change the parent's key set
+    val k = pinned(keys.select(col(keyCol)).filter(col(keyCol).isNotNull))
     (children :+ parent).foreach { case (path, fk) =>
-      recover(path)
-      val dirs = bucketDirs(path)
-      if (dirs.nonEmpty) {
-        // job 1: affected buckets (bucket id recovered from file path)
-        val bOf = regexp_extract(input_file_name(), "/b(\\d+)/[^/]*$", 1).cast("int")
-        val t = spark.read.parquet(dirs.map(_.getPath): _*).withColumn("__b", bOf)
-        val affected = t.join(broadcast(k), col(fk) === col("__k"), "left_semi")
-          .select("__b").distinct().collect().map(_.getInt(0)).toSeq.sorted
-        if (affected.nonEmpty) {
-          // job 2: rewrite only the affected buckets, one partitionBy
-          // write, then swap each bucket dir in (crash-safe per bucket)
-          val keep = spark.read
-            .parquet(affected.map(b => new File(path, bucketName(b)).getPath): _*)
-            .withColumn("__b", bOf)
-            .join(broadcast(k), col(fk) === col("__k"), "left_anti")
-          val staging = new File(path + ".delstaging")
-          if (staging.exists()) deleteRec(staging)
-          keep.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(staging.getPath)
-          affected.foreach { b =>
-            val part = new File(staging, s"__b=$b")
-            val live = new File(path, bucketName(b))
-            if (part.exists()) swapIn(part, live)
-            else if (live.exists()) deleteRec(live) // bucket fully deleted
-          }
-          deleteRec(staging)
-        }
-      }
+      commit(path, None, Some(fk -> k.withColumnRenamed(keyCol, fk)), None, chunkRows = 0)
     }
-  }
-
-  /** OP-15: the reference raises on empty bulk writes
-    * (supabase_repository.py:55-57).
-    */
-  def requireNonEmpty(df: DataFrame, what: String): DataFrame = {
-    require(!df.isEmpty, s"empty bulk write: $what")
-    df
   }
 }

@@ -87,18 +87,19 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
       .select("id")
     // reference deletes stale rows then re-inserts (releases_scraper.py:119);
     // the schema cascade is TWO levels (supabase_schema.sql:29,40):
-    // release -> record (by release_id) -> allocation (by nca_number).
-    // The doomed records' nca_numbers are materialized (inside
-    // deleteCascade) BEFORE the records themselves are deleted.
+    // release -> record (by release_id) -> allocation (by nca_number),
+    // children first. The doomed records' nca_numbers are checkpointed
+    // (inside deleteCascade) BEFORE the records themselves are deleted.
+    // The release rows are not deleted: every changed id is in toQueue,
+    // whose upsert below replaces them, and a crash before that upsert
+    // leaves the old metadata, which CDC re-classifies as changed.
     TableStore.read(spark, recordTable).foreach { recs =>
       val deadNcas = recs.join(broadcast(changed.select(col("id").as("__rid"))),
-        col("release_id") === col("__rid"), "left_semi")
+        col("release_id") === col("__rid"), "left_semi").select("nca_number")
       TableStore.deleteCascade(spark, deadNcas, "nca_number",
         parent = (allocationTable, "nca_number"))
     }
-    TableStore.deleteCascade(spark, changed, "id",
-      parent = (releaseTable, "id"),
-      children = Seq((recordTable, "release_id")))
+    TableStore.deleteCascade(spark, changed, "id", parent = (recordTable, "release_id"))
     val toQueue = proceed.drop("change_status")
     if (!toQueue.isEmpty) {
       QueuePipeline.enqueue(toQueue, releaseQueue)
@@ -180,8 +181,10 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
 
   /** Stage C (reference handlers/worker.py): drain the batch queue,
     * extract every batch's page range from its document blob, run ONE
-    * distributed cleaner pass, and load records (upsert) + allocations
-    * (append).
+    * distributed cleaner pass, and load the results in two merges:
+    * records upserted by nca_number, and allocations bucketed on
+    * nca_number, replacing the batch's previous rows by its
+    * (release, batch) key.
     *
     * Fully distributed — no driver loop: each batch row reads its blob
     * on an executor, and the cleaner partitions by a (release, batch)
@@ -224,14 +227,14 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
         element_at(split(col("doc"), "\u0001"), 1))
       TableStore.upsert(cleaned.records.drop("doc"), recordTable, "nca_number")
       // Allocations keep their (release, batch) provenance key so the
-      // load is idempotent under at-least-once replay: delete-by-key
-      // then append — a redelivered batch replaces its own rows and
-      // never duplicates them (reference plain bulk-insert would).
-      val allocations = cleaned.allocations.withColumnRenamed("doc", "__batch_key")
-        .localCheckpoint(true)
-      TableStore.deleteCascade(spark, allocations, "__batch_key",
-        parent = (allocationTable, "__batch_key"))
-      TableStore.append(allocations, allocationTable, chunkRows = 500)
+      // load is idempotent under at-least-once replay: one merge removes
+      // the batch's rows by that key and adds the new ones — a
+      // redelivered batch replaces its own rows and never duplicates
+      // them (reference plain bulk-insert would).
+      val allocations = CheckpointBlocks.cleanCheckpoint(
+        cleaned.allocations.withColumnRenamed("doc", "__batch_key"))
+      TableStore.merge(allocationTable, "nca_number",
+        remove = Some("__batch_key" -> allocations), add = Some(allocations))
       Seq(grid, allocations).foreach(CheckpointBlocks.release)
     }
 

@@ -114,41 +114,6 @@ class TableStoreSpec extends SparkSpecBase {
     assert(TableStore.read(spark, dir).get.count() === 499)
   }
 
-  test("lookup probes a single bucket and survives literal width mismatch") {
-    val dir = Files.createTempDirectory("ts7").toString + "/t"
-    TableStore.upsert((1 to 500).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
-    assert(TableStore.lookup(spark, dir, "k", 42).get
-      .as[(Int, String)].collect().toSeq === Seq((42, "v42")))
-    // a long literal against an int key must still hash to the right bucket
-    assert(TableStore.lookup(spark, dir, "k", 42L).get
-      .as[(Int, String)].collect().toSeq === Seq((42, "v42")))
-    assert(TableStore.lookup(spark, dir, "k", 9999).get.isEmpty)
-    // single-bucket proof: remove every bucket dir EXCEPT the key's —
-    // the lookup must not notice
-    val keyBucket = TableStore.lookup(spark, dir, "k", 42).get
-      .inputFiles.head.replaceAll(".*/(b\\d{4})/.*", "$1")
-    new File(dir).listFiles().filter(f => f.isDirectory && f.getName != keyBucket)
-      .foreach(f => { def rm(x: File): Unit = { Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); }; rm(f) })
-    assert(TableStore.lookup(spark, dir, "k", 42).get
-      .as[(Int, String)].collect().toSeq === Seq((42, "v42")))
-  }
-
-  test("lookup on an absent table is None") {
-    val dir = Files.createTempDirectory("tslk").toString + "/absent"
-    assert(TableStore.lookup(spark, dir, "k", 1).isEmpty)
-    assert(!new File(dir).exists())
-  }
-
-  test("lookup on bucket dirs without a bucket marker is None") {
-    // append and upsert declare the marker before any bucket lands, so
-    // without it the key-to-bucket modulus is unknown: lookup must not
-    // guess one (a wrong modulus probes the wrong bucket)
-    val dir = Files.createTempDirectory("tsnm").toString + "/t"
-    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/b0000")
-    assert(TableStore.read(spark, dir).get.count() === 2)
-    assert(TableStore.lookup(spark, dir, "k", 1).isEmpty)
-  }
-
   test("append then upsert on the same table merges into its one bucket") {
     val dir = Files.createTempDirectory("ts6").toString + "/t"
     TableStore.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
@@ -156,24 +121,10 @@ class TableStoreSpec extends SparkSpecBase {
     TableStore.upsert(Seq((2, "B2"), (3, "c")).toDF("k", "v"), dir, "k")
     assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().toSet
       === Set((1, "a"), (2, "B2"), (3, "c"), (4, "d")))
-    // the append declared one bucket, and upsert keeps the declaration
+    // the append created one bucket, and upsert keeps it
     assert(bucketFileState(dir).keySet === Set("b0000"))
-    assert(new String(Files.readAllBytes(new File(dir, "_graft_buckets").toPath)).trim === "1")
-    assert(TableStore.lookup(spark, dir, "k", 3).get
-      .as[(Int, String)].collect().toSeq === Seq((3, "c")))
     // no loose files at the table root
     assert(!new File(dir).listFiles().exists(f => f.isFile && !f.getName.startsWith("_")))
-  }
-
-  test("append into a multi-bucket table is refused") {
-    val dir = Files.createTempDirectory("ts8").toString + "/t"
-    TableStore.upsert((1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
-    val before = tableFileState(dir)
-    val e = intercept[IllegalArgumentException] {
-      TableStore.append(Seq((101, "x")).toDF("k", "v"), dir)
-    }
-    assert(e.getMessage.contains("16 buckets"))
-    assert(tableFileState(dir) === before)
   }
 
   test("empty upsert, deleteCascade and append write nothing") {
@@ -209,55 +160,163 @@ class TableStoreSpec extends SparkSpecBase {
     assert(files.length >= 3)
   }
 
-  test("recover: an orphaned bucket backup is restored on the next read") {
-    val dir = Files.createTempDirectory("tsrec").toString + "/t"
+  /** "bNNNN/name" of every file the table's committed manifest names. */
+  private def named(dir: String): Set[String] =
+    Files.readAllLines(new File(dir, "_manifest").toPath).asScala.map(_.split("\t"))
+      .collect { case Array("file", b, f) => f"b${b.toInt}%04d/$f" }.toSet
+
+  private def rows(dir: String): Set[(Int, String)] =
+    TableStore.read(spark, dir).get.as[(Int, String)].collect().toSet
+
+  /** Crash states are built by hand from a table before and after one
+    * upsert of `batch`: `before` and `after` are copies of the table dir.
+    */
+  private def crashStates(tag: String): (String, String, Set[(Int, String)], Set[(Int, String)]) = {
+    val base = Files.createTempDirectory(tag).toString
+    val dir = s"$base/t"
     TableStore.upsert((1 to 200).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
-    // simulate a crash between swapIn's backup and promote steps: the
-    // live bucket dir is gone, its only copy sits in .bak
-    val buckets = new File(dir).listFiles().filter(_.getName.matches("b\\d+"))
-    val victim = buckets.head
-    val bak = new File(dir, victim.getName + ".bak")
-    assert(victim.renameTo(bak))
-    // without recovery this read would silently miss the bucket's rows
-    assert(TableStore.read(spark, dir).get.count() === 200)
-    assert(!bak.exists(), "backup must be promoted back to live")
+    val old = rows(dir)
+    copyTree(dir, s"$base/before")
+    TableStore.upsert(batch, dir, "k")
+    (s"$base/before", dir, old, rows(dir))
+  }
+  private val batch = Seq((7, "NEW"), (300, "x")).toDF("k", "v")
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = new File(from).toPath
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.toList.foreach { p =>
+      val dst = new File(to).toPath.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally walk.close()
   }
 
-  test("recover: an appended table's delete rewrite crashed before promote is restored") {
-    val dir = Files.createTempDirectory("tsrec2").toString + "/t"
-    TableStore.append((1 to 10).map(i => (i, s"v$i")).toDF("k", "v"), dir)
-    // simulate a crash inside deleteCascade's swap of b0000: the survivors
-    // are staged, the live bucket moved to its backup, promote never ran
-    val staging = dir + ".delstaging"
-    (1 to 10).filter(_ != 3).map(i => (i, s"v$i", 0)).toDF("k", "v", "__b")
-      .write.partitionBy("__b").parquet(staging)
-    val bak = new File(dir, "b0000.bak")
-    assert(new File(dir, "b0000").renameTo(bak))
-    // the bucket .bak rule rolls back: the delete never happened
-    assert(TableStore.read(spark, dir).get.count() === 10)
-    assert(!bak.exists() && new File(dir, "b0000").isDirectory)
-    // and the retried delete converges, clearing the stale staging dir
-    TableStore.deleteCascade(spark, Seq(3).toDF("k"), "k", parent = (dir, "k"))
-    assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().map(_._1).toSet
-      === (1 to 10).toSet - 3)
-    assert(!new File(staging).exists())
+  /** After recovery, only the manifest and the files it names are left. */
+  private def assertOnlyNamed(dir: String): Unit =
+    assert(tableFileState(dir).keySet === named(dir) + "_manifest")
+
+  test("crash before the manifest rename: the next read returns the old version exactly") {
+    val (before, after, old, updated) = crashStates("tscrash1")
+    val committed = tableFileState(before)
+    // the merge's new files moved into their buckets and its pending
+    // manifest written, but no rename: the old manifest is still live
+    named(after).diff(named(before)).foreach { f =>
+      Files.createDirectories(new File(before, f).toPath.getParent)
+      Files.copy(new File(after, f).toPath, new File(before, f).toPath)
+    }
+    Files.copy(new File(after, "_manifest").toPath, new File(before, "_manifest.pending").toPath)
+    assert(rows(before) === old)
+    assert(tableFileState(before) === committed)
+    // the retried merge converges to the uncrashed result
+    TableStore.upsert(batch, before, "k")
+    assert(rows(before) === updated)
+    assertOnlyNamed(before)
+  }
+
+  test("crash after the manifest rename: the next read returns the new version and drops superseded files") {
+    val (before, after, old, updated) = crashStates("tscrash2")
+    assert(updated !== old)
+    // the rename done, but the superseded files (and the staging dir)
+    // still present
+    val superseded = named(before).diff(named(after))
+    assert(superseded.nonEmpty)
+    superseded.foreach(f => Files.copy(new File(before, f).toPath, new File(after, f).toPath))
+    new File(after, "_staging/__b=3").mkdirs()
+    assert(rows(after) === updated)
+    assertOnlyNamed(after)
+    assert(!new File(after, "_staging").exists())
+    TableStore.upsert(batch, after, "k")
+    assert(rows(after) === updated)
+    assertOnlyNamed(after)
+  }
+
+  test("a crash during the first merge leaves an absent table") {
+    val base = Files.createTempDirectory("tscrash3").toString
+    val dir = s"$base/t"
+    TableStore.upsert(batch, s"$base/done", "k")
+    // files moved into their buckets and the pending manifest written, no rename
+    copyTree(s"$base/done", dir)
+    assert(new File(dir, "_manifest").renameTo(new File(dir, "_manifest.pending")))
+    assert(TableStore.read(spark, dir).isEmpty)
+    assert(new File(dir).list().isEmpty)
+    TableStore.upsert(batch, dir, "k")
+    assert(rows(dir) === rows(s"$base/done"))
+  }
+
+  test("a table written before the store kept a manifest is refused, not emptied") {
+    val dir = Files.createTempDirectory("tspre").toString + "/t"
+    // the old layout: bucket dirs under a bucket-count marker
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/b0000")
+    Files.write(new File(dir, "_graft_buckets").toPath, "1".getBytes("UTF-8"))
+    val before = tableFileState(dir)
+    val e = intercept[IllegalStateException](TableStore.read(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("_manifest"))
+    intercept[IllegalStateException](TableStore.upsert(batch, dir, "k"))
+    assert(tableFileState(dir) === before)
   }
 
   test("deleteCascade on an appended table stays correct end to end") {
     val dir = Files.createTempDirectory("tsrec4").toString + "/t"
     TableStore.append((1 to 10).map(i => (i, s"v$i")).toDF("k", "v"), dir)
     TableStore.deleteCascade(spark, Seq(3, 7).toDF("k"), "k", parent = (dir, "k"))
-    assert(TableStore.read(spark, dir).get.as[(Int, String)].collect().map(_._1).toSet
-      === (1 to 10).toSet -- Set(3, 7))
+    assert(rows(dir).map(_._1) === (1 to 10).toSet -- Set(3, 7))
     // still one bucket, and no protocol droppings left behind
     assert(bucketFileState(dir).keySet === Set("b0000"))
-    assert(!new File(dir, "b0000.bak").exists())
-    assert(!new File(dir + ".delstaging").exists())
+    assertOnlyNamed(dir)
   }
 
-  test("requireNonEmpty guards empty bulk writes") {
-    intercept[IllegalArgumentException] {
-      TableStore.requireNonEmpty(Seq.empty[Int].toDF("x"), "records")
+  test("append into a bucketed table places rows by the table's key") {
+    val dir = Files.createTempDirectory("tsapp").toString + "/t"
+    TableStore.upsert((1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
+    TableStore.append(Seq((101, "x"), (102, "y")).toDF("k", "v"), dir)
+    // a later upsert finds the appended rows in their key's bucket
+    TableStore.upsert(Seq((101, "X2")).toDF("k", "v"), dir, "k")
+    assert(rows(dir) === (1 to 100).map(i => (i, s"v$i")).toSet + ((101, "X2")) + ((102, "y")))
+  }
+
+  test("merge removes by a non-key column and adds, rewriting only the touched buckets") {
+    val dir = Files.createTempDirectory("tsmerge").toString + "/t"
+    val all = (1 to 300).map(i => (i, s"v$i", if (i <= 3) "batch0" else "batch1"))
+    TableStore.merge(dir, "k", remove = None, add = Some(all.toDF("k", "v", "batch")))
+    val before = bucketFileState(dir)
+    // replace batch0's three rows with one new row: only the buckets that
+    // hold batch0 rows (found by the scan) and the new row's are touched
+    TableStore.merge(dir, "k", remove = Some("batch" -> Seq("batch0").toDF("batch")),
+      add = Some(Seq((3, "new", "batch0")).toDF("k", "v", "batch")))
+    val state = TableStore.read(spark, dir).get.as[(Int, String, String)].collect().toSet
+    assert(state === all.filterNot(_._3 == "batch0").toSet + ((3, "new", "batch0")))
+    val after = bucketFileState(dir)
+    val changed = before.keySet.filter(b => before.get(b) != after.get(b))
+    assert(changed.nonEmpty && changed.size <= 3, s"only batch0's buckets may change, got $changed")
+    // a merge on a different key is refused
+    intercept[IllegalArgumentException](TableStore.merge(dir, "v", None, Some(all.toDF("k", "v", "batch"))))
+  }
+
+  test("a read plans a bucketed table without running a Spark job") {
+    val dir = Files.createTempDirectory("tsjobs").toString + "/t"
+    TableStore.upsert((1 to 500).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k")
+    assert(bucketFileState(dir).size === 16)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val _ = groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+      }
     }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // no schema inference (the manifest has it) and no listing job (16
+      // bucket dirs are under the parallel-listing threshold of 32)
+      sc.setJobGroup("ts-read", "TableStore.read")
+      assert(TableStore.read(spark, dir).get.inputFiles.length >= 16)
+      // the listener bus is FIFO: once the probe job is seen, every job
+      // the read started has been seen too
+      sc.setJobGroup("ts-probe", "listener probe")
+      spark.range(1).count()
+      var spins = 0
+      while (!groups.contains("ts-probe") && spins < 100) { spins += 1; Thread.sleep(50) }
+      assert(groups.contains("ts-probe"))
+      assert(!groups.contains("ts-read"))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 }
