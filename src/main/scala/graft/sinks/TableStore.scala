@@ -83,12 +83,14 @@ object TableStore {
       throw new IllegalStateException(s"$path has bucket dirs but no $ManifestName: it was " +
         "written by the pre-manifest store, which has no migration; rebuild it from its source")
     val m = Option.when(committed.exists())(parse(Files.readAllLines(committed.toPath).asScala.toSeq))
-    Seq(pending, new File(path, StagingName)).foreach(deleteRec)
     buckets.foreach { d =>
       val live = m.flatMap(_.files.get(d.getName.drop(1).toInt)).getOrElse(Nil).toSet
       d.listFiles().filterNot(f => live(f.getName)).foreach(deleteRec)
       if (live.isEmpty) deleteRec(d)
     }
+    // the pending manifest goes last: a crash inside this rule then never
+    // leaves a first merge's bucket dirs without either manifest
+    Seq(new File(path, StagingName), pending).foreach(deleteRec)
     m
   }
 
