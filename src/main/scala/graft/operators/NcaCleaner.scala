@@ -1,25 +1,27 @@
 package graft.operators
 
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
+import graft.functions.GraftFunctions.parseAmount
+import graft.sources.PdfTableSource.GridRow
 
-/** The reference's relational core — the raw-grid cleaner — re-expressed as
-  * a declarative Spark program (reference: src/infrastructure/adapters/
-  * pd_data_cleaner.py:22-183).
+/** The reference's relational core — the raw-grid cleaner — as a pure
+  * function of one batch's grid rows (reference: src/infrastructure/
+  * adapters/pd_data_cleaner.py:22-183, called once per page-range batch
+  * by worker.py:69-94).
   *
-  * Input: a DataFrame of extracted table rows
-  *   (doc: string, ord: long, cells: array<string>)
-  * where per doc the minimum-ord row is the header and `cells` elements are
-  * nullable (empty PDF cells). `doc` identifies one source document
-  * (release); ALL windows and groupings are partitioned by `doc`, so the
-  * program scales horizontally — at 100 TB there is one window partition
-  * per document, never a global sort.
+  * Input: one batch's extracted rows (doc, ord, cells), where the
+  * minimum-ord row is the header and `cells` elements are nullable (empty
+  * PDF cells). [[cleanBatch]] needs no shuffle, window or session, so
+  * `EtlPipeline.work` runs it in the task that extracted the batch;
+  * [[clean]] applies it to a whole grid, one group per doc.
   *
   * Semantics preserved from the reference (warts and all):
   *  - header names normalized lower+underscore, projected to VALID_COLUMNS
-  *    (pd_data_cleaner.py:62-67)
+  *    (pd_data_cleaner.py:62-67); a header missing any of them raises, as
+  *    the reference's df[valid_columns] KeyError does, so the batch
+  *    dead-letters instead of silently losing the document
   *  - spacer rows inserted between consecutive rows whose nca_numbers are
   *    both non-blank and differ (:70-97) — load-bearing: a repeated header
   *    row mid-group gets a spacer before it, which splits the group's
@@ -28,12 +30,18 @@ import graft.functions.GraftFunctions._
   *    first key are dropped (pandas groupby drops NaN keys)
   *  - record-ish columns joined by take-while-nonempty (:120-132); agency/
   *    operating_unit/amount collected as ordered lists (:39-41)
-  *  - allocations: zip-explode of the lists (:150-151), then segment-and-
-  *    merge: maximal runs of rows with a non-blank allocation cell merge
-  *    into one row, all-blank rows separate runs (:152-163); merged amounts
-  *    that no longer parse are dropped (:169-172)
+  *  - allocations: zip of the lists (:150-151), then segment-and-merge:
+  *    maximal runs of rows with a non-blank allocation cell merge into one
+  *    row, all-blank rows separate runs (:152-163); merged amounts that no
+  *    longer parse are dropped (:169-172)
   *  - released_date parsed with coerce-to-null and formatted ISO-8601'T'
-  *    (:135-137); keep-first dedup on nca_number (:138-140)
+  *    (:135-137); keep-first dedup on nca_number in document order
+  *    (:138-140)
+  *
+  * String rules are Spark's, because an independent DataFrame program of
+  * the same semantics is the test oracle: `trim` strips U+0020 only, `\s+`
+  * is Java's ASCII class. Dates and amounts are parsed by [[finish]] with
+  * Spark's own expressions.
   */
 object NcaCleaner {
 
@@ -49,152 +57,115 @@ object NcaCleaner {
 
   final case class Cleaned(records: DataFrame, allocations: DataFrame)
 
-  /** Full cleaner program. `grid` columns: (doc string, ord long,
-    * cells array<string>). Returns records + allocations keyed by doc.
+  /** One output row of [[cleanBatch]]: a record (`record`, allocation
+    * columns null) or an allocation (record columns null), with the date
+    * and amount still unparsed.
+    */
+  final case class CleanRow(doc: String, record: Boolean, nca_number: String,
+                            nca_type: String, released_date: String, department: String,
+                            purpose: String, agency: String, operating_unit: String,
+                            amount: String)
+
+  /** Spark's `trim`: strips U+0020 only. */
+  private def trimSpaces(s: String): String = {
+    val from = s.indexWhere(_ != ' ')
+    if (from < 0) "" else s.substring(from, s.lastIndexWhere(_ != ' ') + 1)
+  }
+
+  /** GraftFunctions.normalizeToken on a plain string. */
+  private def normalizeToken(s: String): String =
+    trimSpaces(s).toLowerCase(Locale.ROOT).replaceAll("\\s+", " ").replace(' ', '_')
+
+  /** Clean one batch: its records and allocations, in any order. The
+    * rows may arrive in any order; `ord` orders them.
+    */
+  def cleanBatch(grid: Seq[GridRow]): Seq[CleanRow] = {
+    val rows = grid.sortBy(_.ord)
+      .map(r => r.ord -> Option(r.cells).fold(IndexedSeq.empty[String])(_.toIndexedSeq))
+    // the minimum-ord row is the header
+    val body = rows.drop(1).filter(_._1 > rows.head._1).map(_._2)
+    if (body.isEmpty) return Nil
+    val doc = grid.head.doc
+    val header = rows.head._2
+      .map(c => Option(c).getOrElse("").toLowerCase(Locale.ROOT).replace(' ', '_'))
+    val missing = ValidColumns.filterNot(header.contains)
+    if (missing.nonEmpty) throw new IllegalArgumentException(
+      s"header missing required column(s) ${missing.mkString(", ")} in doc $doc")
+    def of(name: String): Int = ValidColumns.indexOf(name)
+    val key = of("nca_number")
+    val at = ValidColumns.map(header.indexOf)
+    // ragged rows (fewer cells than the header) read null for the rest
+    val projected = body.map(cells => at.map(i => cells.lift(i).orNull))
+
+    def blank(s: String): Boolean = s == null || trimSpaces(s).isEmpty
+    val spaced = projected.zip(null +: projected.map(_(key))).flatMap { case (r, prev) =>
+      if (!blank(prev) && !blank(r(key)) && r(key) != prev) Seq(ValidColumns.map(_ => ""), r)
+      else Seq(r)
+    }
+    def isHeaderRow(r: Seq[String]): Boolean =
+      ValidColumns.indices.forall(i => r(i) != null && normalizeToken(r(i)) == ValidColumns(i))
+    // forward fill of the key; rows before the first key drop out
+    val keyed = spaced.filterNot(isHeaderRow)
+      .scanLeft(Option.empty[String] -> Seq.empty[String]) { case ((last, _), r) =>
+        (Option(r(key)).filter(_.nonEmpty).orElse(last), r)
+      }.collect { case (Some(k), r) => k -> r }
+    // groups in order of first appearance, each group's rows in order
+    val groups = keyed.map(_._1).distinct.map(k => k -> keyed.collect { case (`k`, r) => r })
+
+    val records = groups.map { case (k, g) =>
+      val joined = JoinedColumns.map(c =>
+        trimSpaces(g.map(_(of(c))).takeWhile(v => v != null && v.nonEmpty).mkString(" ")))
+      CleanRow(doc, record = true, trimSpaces(k), joined(0), joined(1), joined(2), joined(3),
+        null, null, null)
+    }.distinctBy(_.nca_number)
+    val allocations = groups.flatMap { case (k, g) =>
+      val lists = g.map(r => ListColumns.map(c => Option(r(of(c))).getOrElse("")))
+      val runs = lists.foldRight(List(List.empty[Seq[String]])) { (r, acc) =>
+        if (r.forall(_.isEmpty)) Nil :: acc else (r :: acc.head) :: acc.tail
+      }
+      runs.filter(_.nonEmpty).map { run =>
+        val merged = ListColumns.indices.map(i => trimSpaces(run.map(_(i)).mkString(" ")))
+        CleanRow(doc, record = false, trimSpaces(k), null, null, null, null,
+          merged(0), merged(1), merged(2))
+      }
+    }
+    records ++ allocations
+  }
+
+  /** The parse step over [[cleanBatch]]'s rows, one narrow projection:
+    * released_date with coerce-to-null formatted ISO-8601'T', amounts
+    * parsed and allocations whose amount does not parse dropped, and
+    * `release_id` from `releaseId`.
+    */
+  def finish(rows: DataFrame, releaseId: Column): DataFrame = {
+    val d = col("released_date")
+    val date = date_format(coalesce(
+      try_to_timestamp(d),
+      try_to_timestamp(d, lit("M/d/yyyy")),
+      try_to_timestamp(d, lit("MMM d, yyyy")),
+      try_to_timestamp(d, lit("MMMM d, yyyy"))), "yyyy-MM-dd'T'HH:mm:ss")
+    rows.select(col("doc"), col("record"), col("nca_number"), col("nca_type"),
+        date.as("released_date"), col("department"), col("purpose"),
+        releaseId.as("release_id"), col("agency"), col("operating_unit"),
+        parseAmount(col("amount")).as("amount"))
+      .filter(col("record") || col("amount").isNotNull)
+  }
+
+  /** [[finish]]'s rows as records and allocations, keyed by doc. */
+  def byKind(finished: DataFrame): Cleaned =
+    Cleaned(finished.filter(col("record")).select(("doc" +: RecordColumns).map(col): _*),
+      finished.filter(!col("record")).select(("doc" +: AllocationColumns).map(col): _*))
+
+  /** The cleaner over a whole grid (doc string, ord long, cells
+    * array<string>): [[cleanBatch]] per doc. Returns records +
+    * allocations keyed by doc.
     */
   def clean(grid: DataFrame, releaseId: Column): Cleaned = {
-    val wDoc = Window.partitionBy(col("doc")).orderBy(col("ord"))
-
-    // --- header extraction + projection to VALID_COLUMNS (OP-16/17) -----
-    // Per-doc header = the min-ord row; normalize names and look up each
-    // valid column's position dynamically (adaptive schema-on-read).
-    val withHdr = grid
-      .withColumn("hdr", transform(
-        first(col("cells")).over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-        c => regexp_replace(lower(coalesce(c, lit(""))), " ", "_")))
-      .withColumn("hdr_ord", min(col("ord")).over(Window.partitionBy(col("doc"))))
-      .filter(col("ord") > col("hdr_ord"))
-
-    // try_element_at, not element_at: real PDFs emit ragged rows (fewer
-    // cells than the header), and ANSI element_at would throw
-    // INVALID_ARRAY_INDEX_IN_ELEMENT_AT on them; a missing cell is null.
-    val projected0 = ValidColumns.foldLeft(withHdr) { (df, c) =>
-      val pos = array_position(col("hdr"), lit(c))
-      df.withColumn(c,
-        when(pos > 0, try_element_at(col("cells"), pos.cast("int"))))
-    }
-    // A header MISSING any valid column raises (matching the reference's
-    // pandas KeyError from df[valid_columns], pd_data_cleaner.py:67 —
-    // the batch dead-letters); silently nulling the column would drop
-    // the whole document with no signal. The check rides on nca_number —
-    // the group key EVERY output consumes — so column pruning cannot
-    // optimize it away the way a per-column raise would be for columns
-    // a given consumer never reads.
-    val missingCols = concat_ws(", ", ValidColumns.map(c =>
-      when(array_position(col("hdr"), lit(c)) === 0, lit(c))): _*)
-    val projected = projected0
-      .withColumn("nca_number",
-        when(missingCols === "", col("nca_number"))
-          .otherwise(raise_error(concat(
-            lit("header missing required column(s) "), missingCols,
-            lit(" in doc "), col("doc")))))
-      .select((Seq("doc", "ord") ++ ValidColumns).map(col): _*)
-
-    // --- spacer insertion (OP-36, first call) ---------------------------
-    // Instead of imperatively rebuilding the frame, flag rows that need a
-    // preceding all-"" spacer (prev and cur nca both non-blank + differ)
-    // and union synthesized spacer rows at ord*2 (data rows at ord*2+1),
-    // preserving relative order without a driver-side loop.
-    val prevNca = lag(col("nca_number"), 1).over(wDoc)
-    def blankish(c: Column): Column = c.isNull || trim(c) === ""
-    val flagged = projected.withColumn("need_spacer",
-      !blankish(prevNca) && !blankish(col("nca_number")) &&
-        col("nca_number") =!= prevNca)
-
-    val dataRows = flagged
-      .withColumn("ord", col("ord") * 2 + 1)
-    val spacerRows = flagged.filter(col("need_spacer"))
-      .select(Seq(col("doc"), (col("ord") * 2).as("ord")) ++
-        ValidColumns.map(c => lit("").as(c)) :+ lit(false).as("need_spacer"): _*)
-    val spaced = dataRows.unionByName(spacerRows).drop("need_spacer")
-
-    // --- repeated-header-row removal (OP-18) ----------------------------
-    val isHeaderRow = ValidColumns
-      .map(c => normalizeToken(col(c)) === lit(c))
-      .reduce(_ && _)
-    val deHeadered = spaced.filter(!coalesce(isHeaderRow, lit(false)))
-
-    // --- ""->null + forward-fill of the group key (OP-22/30) ------------
-    val wFill = Window.partitionBy(col("doc")).orderBy(col("ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = deHeadered
-      .withColumn("nca_number",
-        last(when(col("nca_number") =!= "", col("nca_number")), ignoreNulls = true)
-          .over(wFill))
-      .filter(col("nca_number").isNotNull) // pandas groupby drops NaN keys
-
-    // --- group-by nca_number with per-column agg (OP-31/32/33) ----------
-    val aggs =
-      JoinedColumns.map(c =>
-        takeWhileJoin(collect_list(struct(col("ord").as("ord"), col(c).as("v")))).as(c)) ++
-      ListColumns.map(c =>
-        array_sort(collect_list(struct(col("ord").as("ord"),
-          coalesce(col(c), lit("")).as("v")))).as(s"${c}_list")) :+
-      // each group's first-row position: the keep-first dedup below must
-      // order by DOCUMENT order (pandas keep='first'), not by the
-      // partition key itself (constant within the partition, i.e. an
-      // arbitrary winner whenever two raw keys collapse after trim)
-      min(col("ord")).as("__ord")
-    val grouped = filled
-      .groupBy(col("doc"), col("nca_number"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("release_id", releaseId)
-
-    // --- records (OP-23/34/54) ------------------------------------------
-    val parsedDate = {
-      val c = col("released_date")
-      val ts = coalesce(
-        try_to_timestamp(c),
-        try_to_timestamp(c, lit("M/d/yyyy")),
-        try_to_timestamp(c, lit("MMM d, yyyy")),
-        try_to_timestamp(c, lit("MMMM d, yyyy")))
-      date_format(ts, "yyyy-MM-dd'T'HH:mm:ss")
-    }
-    val wDedup = Window.partitionBy(col("doc"), col("nca_number"))
-      .orderBy(col("__ord"))
-    val records = grouped
-      .withColumn("nca_number", trim(col("nca_number")))
-      .withColumn("released_date", parsedDate)
-      .withColumn("rn", row_number().over(wDedup))
-      .filter(col("rn") === 1)
-      .select((Seq("doc") ++ RecordColumns).map(col): _*)
-
-    // --- allocations: zip-explode + segment-and-merge (OP-37/38/55) -----
-    // Per group, the ordered lists are zipped positionally and re-split
-    // into rows; an all-blank row separates merge-runs (the reference's
-    // fold rewritten as running-sum sessionization, per-group — spacer
-    // rows between groups are unnecessary here because grouping already
-    // isolates them).
-    val zipped = grouped
-      .select(col("doc"), col("nca_number"),
-        posexplode(arrays_zip(
-          transform(col("agency_list"), r => r("v")).as("agency"),
-          transform(col("operating_unit_list"), r => r("v")).as("operating_unit"),
-          transform(col("amount_list"), r => r("v")).as("amount"))))
-      .select(col("doc"), col("nca_number"), col("pos"),
-        col("col.agency").as("agency"),
-        col("col.operating_unit").as("operating_unit"),
-        col("col.amount").as("amount"))
-    val isSep = ListColumns.map(c => col(c) === "").reduce(_ && _)
-    val wSeg = Window.partitionBy(col("doc"), col("nca_number")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val segmented = zipped
-      .withColumn("is_sep", isSep)
-      .withColumn("run", sum(col("is_sep").cast("int")).over(wSeg))
-      .filter(!col("is_sep"))
-
-    def mergeCol(c: String): Column =
-      trim(array_join(transform(
-        array_sort(collect_list(struct(col("pos").as("ord"), col(c).as("v")))),
-        r => r("v")), " ")).as(c)
-    val allocations = segmented
-      .groupBy(col("doc"), col("nca_number"), col("run"))
-      .agg(mergeCol("agency"), mergeCol("operating_unit"), mergeCol("amount"))
-      .withColumn("nca_number", trim(col("nca_number")))
-      .withColumn("amount", parseAmount(col("amount")))
-      .filter(col("amount").isNotNull)
-      .select((Seq("doc") ++ AllocationColumns).map(col): _*)
-
-    Cleaned(records, allocations)
+    val spark = grid.sparkSession
+    import spark.implicits._
+    val rows = grid.select(col("doc"), lit(0).as("page"), col("ord").cast("long").as("ord"),
+        col("cells"))
+      .as[GridRow].groupByKey(_.doc).flatMapGroups((_, g) => cleanBatch(g.toSeq))
+    byKind(finish(rows.toDF(), releaseId))
   }
 }

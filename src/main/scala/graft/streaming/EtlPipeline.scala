@@ -22,8 +22,8 @@ import graft.sources.{BlobFetcher, HtmlLinkSource, PdfTableSource}
   * merges so at-least-once replays stay exactly-once-effective.
   *
   * At 100 TB the same program runs unchanged: stage C's unit of
-  * parallelism is (document, page-range) rows; the cleaner's windows are
-  * partitioned by doc, so adding executors scales each stage linearly.
+  * parallelism is the (document, page-range) batch, extracted and cleaned
+  * in one task, so adding executors scales each stage linearly.
   */
 final class EtlPipeline(spark: SparkSession, workDir: String,
                         batchSize: Int = 10) {
@@ -179,20 +179,18 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
       QueuePipeline.enqueue(batches, batchQueue)
     }
 
-  /** Stage C (reference handlers/worker.py): drain the batch queue,
-    * extract every batch's page range from its document blob, run ONE
-    * distributed cleaner pass, and load the results in two merges:
-    * records upserted by nca_number, and allocations bucketed on
-    * nca_number, replacing the batch's previous rows by its
-    * (release, batch) key.
+  /** Stage C (reference handlers/worker.py): drain the batch queue and
+    * load the results in two merges: records upserted by nca_number, and
+    * allocations bucketed on nca_number, replacing the batch's previous
+    * rows by its (release, batch) key.
     *
-    * Fully distributed — no driver loop: each batch row reads its blob
-    * on an executor, and the cleaner partitions by a (release, batch)
-    * key exactly as the reference cleans per-batch (worker.py:69-94:
-    * each batch's first extracted row is consumed as that batch's
-    * header — real PDFs repeat the header on every page). The extracted
-    * grid and the allocations are materialized once per micro-batch, so
-    * every batch is extracted once and cleaned once per output.
+    * One task reads a batch's blob, extracts its page range and cleans
+    * it (`NcaCleaner.cleanBatch`), as the reference cleans per batch
+    * (worker.py:69-94: each batch's first extracted row is that batch's
+    * header — real PDFs repeat the header on every page). No shuffle or
+    * window runs between extraction and the parse projection, whose
+    * output is checkpointed once per micro-batch; both loads filter that
+    * checkpoint.
     */
   def work(blobDir: String,
            extractor: PdfTableSource.TableExtractor = PdfTableSource.StubPdfFormat): Long =
@@ -203,39 +201,37 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
         col("release.filename"), col("release.id"),
         col("batch_number"), col("start_page_num"), col("end_page_num"))
         .as[(String, String, Int, Int, Int)]
-      // a batch whose blob is MISSING must fail (-> per-message
-      // quarantine), not silently yield no rows with its queue message
-      // checkpointed as processed — the reference worker raises and
-      // dead-letters exactly this case. Blobs are the regular files
-      // directly in blobDir, by name: the set saveBlobs writes and
-      // listBlobs (CDC) probes, so a name with a separator is never one
-      // (nor may it escape blobDir). Spark's file sources would hide
-      // names starting with `_` or `.`, which CDC then classifies
-      // unchanged and never retries.
-      val missing = tasks.map(_._1).distinct().collect().filter(f =>
-        f.contains('/') || f.contains('\\') || !new File(blobDir, f).isFile)
-      if (missing.nonEmpty)
-        throw new java.io.IOException(
-          s"blob missing for queued batch(es): ${missing.sorted.mkString(", ")}")
-      // doc key = releaseId + U+0001 + batch: per-batch cleaner isolation;
-      // release id is recovered from the key after cleaning.
-      val grid = tasks.mapPartitions(_.flatMap { case (fn, rid, bn, s, e) =>
-          val bytes = Files.readAllBytes(new File(blobDir, fn).toPath)
-          extractor.extract(s"$rid\u0001$bn", bytes, s, e)
-        }).toDF().select(col("doc"), col("ord"), col("cells")).localCheckpoint(true)
-      val cleaned = NcaCleaner.clean(grid,
-        element_at(split(col("doc"), "\u0001"), 1))
-      TableStore.upsert(cleaned.records.drop("doc"), recordTable, "nca_number")
+      // doc key = releaseId + U+0001 + batch: the cleaner's unit; the
+      // release id is recovered from the key by the parse projection
+      val cleaned = tasks.mapPartitions(_.flatMap { case (fn, rid, bn, s, e) =>
+          // a batch whose blob is MISSING must fail (-> per-message
+          // quarantine), not silently yield no rows with its queue message
+          // checkpointed as processed — the reference worker raises and
+          // dead-letters exactly this case. Blobs are the regular files
+          // directly in blobDir, by name: the set saveBlobs writes and
+          // listBlobs (CDC) probes, so a name with a separator is never
+          // one (nor may it escape blobDir). Spark's file sources would
+          // hide names starting with `_` or `.`, which CDC then
+          // classifies unchanged and never retries.
+          val blob = new File(blobDir, fn)
+          if (fn.contains('/') || fn.contains('\\') || !blob.isFile)
+            throw new java.io.IOException(s"blob missing for queued batch: $fn")
+          val key = s"$rid\u0001$bn"
+          NcaCleaner.cleanBatch(extractor.extract(key, Files.readAllBytes(blob.toPath), s, e).toSeq)
+        }).toDF()
+      val out = CheckpointBlocks.cleanCheckpoint(
+        NcaCleaner.finish(cleaned, element_at(split(col("doc"), "\u0001"), 1)))
+      val parts = NcaCleaner.byKind(out)
+      TableStore.upsert(parts.records.drop("doc"), recordTable, "nca_number")
       // Allocations keep their (release, batch) provenance key so the
       // load is idempotent under at-least-once replay: one merge removes
       // the batch's rows by that key and adds the new ones — a
       // redelivered batch replaces its own rows and never duplicates
       // them (reference plain bulk-insert would).
-      val allocations = CheckpointBlocks.cleanCheckpoint(
-        cleaned.allocations.withColumnRenamed("doc", "__batch_key"))
+      val allocations = parts.allocations.withColumnRenamed("doc", "__batch_key")
       TableStore.merge(allocationTable, "nca_number",
         remove = Some("__batch_key" -> allocations), add = Some(allocations))
-      Seq(grid, allocations).foreach(CheckpointBlocks.release)
+      CheckpointBlocks.release(out)
     }
 
   def records: Option[DataFrame] = TableStore.read(spark, recordTable)

@@ -618,6 +618,100 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(counts.values.toSet === Set(1))
   }
 
+  /** Spark jobs one `work` micro-batch runs on the three-batch fixture of
+    * "extracts each queued batch exactly once": 18 when the micro-batch
+    * collected its blob names first and the cleaner ran as a window
+    * program over the checkpointed grid, once per output.
+    */
+  private val WorkJobs = 13
+
+  test("one work micro-batch runs a pinned number of Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val workDir = Files.createTempDirectory("etljobs").toString
+    val blobDir = s"$workDir/blobs"
+    writeBlob(blobDir, "NCA_2023.pdf", Seq(
+      page(Seq("NCA-7", "Regular", "2023-07-01", "DA", "AgA", "OU1", "70.00", "Seeds")),
+      page(Seq("NCA-8", "Special", "2023-08-01", "DA", "AgB", "OU2", "80.00", "Tools"))))
+    writeBlob(blobDir, "NCA_2024.pdf", Seq(
+      page(Seq("NCA-9", "Regular", "2024-09-01", "DTI", "AgC", "OU3", "90.00", "Trade"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 1)
+    val candidates = Seq(
+      ("id_2023", "NCA 2023", "NCA_2023.pdf", "https://x/NCA_2023.pdf",
+        2023, 2, Some("c"), Some("m")),
+      ("id_2024", "NCA 2024", "NCA_2024.pdf", "https://x/NCA_2024.pdf",
+        2024, 1, Some("c"), Some("m"))
+    ).toDF("id", "title", "filename", "url", "year", "page_count",
+      "file_meta_created_at", "file_meta_modified_at")
+    pipe.scrape(candidates, Seq("NCA_2023.pdf", "NCA_2024.pdf").toDF("filename"))
+    pipe.orchestrate()
+
+    // a stage's jobs run under its streaming query's run id as job group;
+    // onQueryStarted is delivered synchronously, the job events in order
+    // (so a marker job seen means every earlier job has been seen)
+    val runIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        runIds.add(e.runId.toString)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    spark.streams.addListener(queries)
+    sc.addSparkListener(jobs)
+    val microBatches = try {
+      val m = pipe.work(blobDir)
+      sc.setJobGroup("etljobs-marker", "etljobs-marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("etljobs-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      m
+    } finally { spark.streams.removeListener(queries); sc.removeSparkListener(jobs) }
+    assert(groups.contains("etljobs-marker"), "listener bus did not deliver the marker job")
+    val run = runIds.asScala.toSeq
+    val n = groups.asScala.count(run.contains)
+    info(s"Spark jobs in one work micro-batch: $n")
+    assert(microBatches === 1 && run.size === 1)
+    assert(pipe.records.get.count() === 3)
+    assert(n === WorkJobs, s"jobs in one work micro-batch: $n")
+  }
+
+  test("a batch whose header lacks a valid column quarantines; the other batches load") {
+    val workDir = Files.createTempDirectory("etlnoamount").toString
+    val blobDir = s"$workDir/blobs"
+    writeBlob(blobDir, "NCA_2023.pdf", Seq(
+      Seq(header.filterNot(_ == "AMOUNT"),
+        Seq("NCA-1", "Regular", "2023-01-01", "DA", "AgA", "OU1", "Seeds"))))
+    writeBlob(blobDir, "NCA_2024.pdf", Seq(
+      page(Seq("NCA-2", "Special", "2024-02-01", "DTI", "AgB", "OU2", "20.00", "Trade")),
+      page(Seq("NCA-3", "Regular", "2024-03-01", "DTI", "AgC", "OU3", "30.00", "Nets"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 1)
+    val candidates = Seq(
+      ("id_2023", "NCA 2023", "NCA_2023.pdf", "https://x/NCA_2023.pdf",
+        2023, 1, Some("c"), Some("m")),
+      ("id_2024", "NCA 2024", "NCA_2024.pdf", "https://x/NCA_2024.pdf",
+        2024, 2, Some("c"), Some("m"))
+    ).toDF("id", "title", "filename", "url", "year", "page_count",
+      "file_meta_created_at", "file_meta_modified_at")
+    pipe.scrape(candidates, Seq("NCA_2023.pdf", "NCA_2024.pdf").toDF("filename"))
+    pipe.orchestrate()
+    // the three batches arrive as one micro-batch
+    assert(pipe.work(blobDir) === 1)
+    assert(pipe.records.get.select("nca_number").as[String].collect().toSeq.sorted
+      === Seq("NCA-2", "NCA-3"))
+    assert(pipe.allocations.get.select("nca_number").as[String].collect().toSeq.sorted
+      === Seq("NCA-2", "NCA-3"))
+    val dead = spark.read.text(pipe.quarantine).as[String].collect().toSeq
+    assert(dead.size === 1 && dead.head.contains("NCA_2023.pdf"), dead.mkString("\n"))
+  }
+
   test("a refresh equals a from-scratch load of the final corpus; a redelivered batch duplicates nothing") {
     val workDir = Files.createTempDirectory("etlrebuild").toString
     val blobDir = s"$workDir/blobs"
