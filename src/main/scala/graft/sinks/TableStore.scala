@@ -4,7 +4,7 @@ import java.io.{File, PrintWriter}
 import java.nio.file.{Files, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -27,6 +27,16 @@ import graft.CheckpointBlocks
   * converges. Renames assume one filesystem (local/HDFS-style). Writes
   * are idempotent under the OP-61 at-least-once replay, and an empty
   * input writes nothing.
+  *
+  * A merge's job budget: the pins of its inputs (none for a frame that
+  * already reads only checkpoints or local rows), ONE narrow job that
+  * collects the touched bucket ids with no exchange, and the write.
+  * Removal keys are not deduplicated (the semi and anti joins ignore
+  * duplicates), so removing by the bucket key reads no table file to
+  * find its buckets; a cascade should remove by each table's own key.
+  * The write carries [[NioLocalFileSystem.WriteOptions]]: without
+  * libhadoop, Hadoop's local filesystem forks a `chmod` for every file
+  * and directory it creates.
   */
 object TableStore {
 
@@ -155,7 +165,8 @@ object TableStore {
     val before = recover(path)
     if (add.isEmpty && (before.isEmpty || remove.isEmpty)) return
     val rows = add.map(pinned)
-    val gone = remove.map { case (c, keys) => c -> pinned(keys.select(col(c).as("__k"))).distinct() }
+    // no distinct: the semi and anti joins below ignore duplicate keys
+    val gone = remove.map { case (c, keys) => c -> pinned(keys.select(col(c).as("__k"))) }
     val spark = (rows ++ gone.map(_._2)).head.sparkSession
     val m = before.getOrElse(Manifest(0, key.getOrElse(""),
       if (key.isDefined) DefaultBuckets else 1, rows.get.schema, Map.empty))
@@ -171,8 +182,9 @@ object TableStore {
       else table(live).select(col(c)).join(broadcast(k), col(c) <=> col("__k"), "left_semi")
         .select(regexp_extract(input_file_name(), "/b(\\d+)/[^/]*$", 1).cast("int"))
     }
-    val touched = (rows.map(_.select(bucketOf(col(m.key)))) ++ removedFrom)
-      .reduceOption(_ union _).fold(Set.empty[Int])(_.distinct().collect().map(_.getInt(0)).toSet)
+    // one narrow job: bucket ids deduplicated within each partition, no exchange
+    val touched = (rows.map(_.select(bucketOf(col(m.key)))) ++ removedFrom).reduceOption(_ union _)
+      .fold(Set.empty[Int])(_.as(Encoders.scalaInt).mapPartitions(_.distinct)(Encoders.scalaInt).collect().toSet)
     if (touched.isEmpty) return
 
     val kept = Option.when((live & touched).nonEmpty)(table(live & touched)).map(t =>
@@ -181,7 +193,7 @@ object TableStore {
     val next = (kept ++ rows).reduce(_ unionByName _).withColumn("__b", bucketOf(col(m.key)))
       .repartition(col("__b"))
     val staging = new File(path, StagingName)
-    val w = next.write.partitionBy("__b").mode(SaveMode.Overwrite)
+    val w = next.write.options(NioLocalFileSystem.WriteOptions).partitionBy("__b").mode(SaveMode.Overwrite)
     (if (chunkRows > 0) w.option("maxRecordsPerFile", chunkRows.toLong) else w).parquet(staging.getPath)
 
     val written = Option(staging.listFiles()).toSeq.flatten.filter(_.getName.startsWith("__b="))

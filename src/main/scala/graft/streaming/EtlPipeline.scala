@@ -87,19 +87,21 @@ final class EtlPipeline(spark: SparkSession, workDir: String,
       .select("id")
     // reference deletes stale rows then re-inserts (releases_scraper.py:119);
     // the schema cascade is TWO levels (supabase_schema.sql:29,40):
-    // release -> record (by release_id) -> allocation (by nca_number),
-    // children first. The doomed records' nca_numbers are checkpointed
-    // (inside deleteCascade) BEFORE the records themselves are deleted.
+    // release -> record (by release_id) -> allocation (by nca_number).
+    // Both levels remove by the doomed records' nca_numbers, pinned once
+    // (inside deleteCascade) before any file changes, allocations first.
+    // nca_number is the record table's unique key and bucket key and is
+    // never null, so removing records by it removes exactly the changed
+    // releases' records, with no scan of the table for their buckets.
     // The release rows are not deleted: every changed id is in toQueue,
     // whose upsert below replaces them, and a crash before that upsert
     // leaves the old metadata, which CDC re-classifies as changed.
     TableStore.read(spark, recordTable).foreach { recs =>
       val deadNcas = recs.join(broadcast(changed.select(col("id").as("__rid"))),
         col("release_id") === col("__rid"), "left_semi").select("nca_number")
-      TableStore.deleteCascade(spark, deadNcas, "nca_number",
-        parent = (allocationTable, "nca_number"))
+      TableStore.deleteCascade(spark, deadNcas, "nca_number", parent = (recordTable, "nca_number"),
+        children = Seq(allocationTable -> "nca_number"))
     }
-    TableStore.deleteCascade(spark, changed, "id", parent = (recordTable, "release_id"))
     val toQueue = proceed.drop("change_status")
     if (!toQueue.isEmpty) {
       QueuePipeline.enqueue(toQueue, releaseQueue)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
+import graft.sinks.NioLocalFileSystem
 
 /** The reference's queue-driven incremental pipeline semantics
   * (SURVEY §2.9, OP-59..OP-65) on Structured Streaming.
@@ -32,8 +33,11 @@ object QueuePipeline {
     * append to the queue directory.
     */
   def enqueue(df: DataFrame, queueDir: String): Unit =
-    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))
-      .write.mode("append").text(queueDir)
+    appendText(df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value")), queueDir)
+
+  /** Append one-column text rows to `dir` with the store's writer options. */
+  private def appendText(lines: DataFrame, dir: String): Unit =
+    lines.write.options(NioLocalFileSystem.WriteOptions).mode("append").text(dir)
 
   /** OP-10: batch-mode queue read (used by tests/oracles). */
   def dequeueAll(spark: SparkSession, queueDir: String, schema: StructType): DataFrame =
@@ -81,7 +85,7 @@ object QueuePipeline {
           // OP-61/62: unparseable messages -> quarantine, not failure.
           val isBad = col("m").isNull || col(s"m.$corruptCol").isNotNull
           val bad = parsed.filter(isBad).select("value")
-          if (!bad.isEmpty) bad.write.mode("append").text(quarantineDir)
+          if (!bad.isEmpty) appendText(bad, quarantineDir)
           val goodRaw = parsed.filter(!isBad)
           val good = goodRaw.select("m.*").drop(corruptCol)
           if (!good.isEmpty) {
@@ -103,8 +107,7 @@ object QueuePipeline {
                   .select("m.*").drop(corruptCol)
                 try process(one)
                 catch { case scala.util.control.NonFatal(_) =>
-                  spark.createDataset(Seq(v)).toDF("value")
-                    .write.mode("append").text(quarantineDir)
+                  appendText(spark.createDataset(Seq(v)).toDF("value"), quarantineDir)
                 }
               }
             }

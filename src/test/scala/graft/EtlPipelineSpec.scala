@@ -618,15 +618,41 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(counts.values.toSet === Set(1))
   }
 
+  /** Job groups of the Spark jobs started while `body` runs. The listener
+    * bus delivers job events in order, so once a marker job is seen, so is
+    * every job before it.
+    */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobs)
+    try {
+      body
+      sc.setJobGroup("etljobs-marker", "etljobs-marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("etljobs-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(jobs)
+    assert(groups.contains("etljobs-marker"), "listener bus did not deliver the marker job")
+    groups.asScala.toSeq
+  }
+
   /** Spark jobs one `work` micro-batch runs on the three-batch fixture of
     * "extracts each queued batch exactly once": 18 when the micro-batch
     * collected its blob names first and the cleaner ran as a window
-    * program over the checkpointed grid, once per output.
+    * program over the checkpointed grid, once per output; 13 when each
+    * store merge collected its touched buckets through a shuffle.
     */
-  private val WorkJobs = 13
+  private val WorkJobs = 11
 
   test("one work micro-batch runs a pinned number of Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val workDir = Files.createTempDirectory("etljobs").toString
     val blobDir = s"$workDir/blobs"
@@ -647,40 +673,117 @@ class EtlPipelineSpec extends SparkSpecBase {
     pipe.orchestrate()
 
     // a stage's jobs run under its streaming query's run id as job group;
-    // onQueryStarted is delivered synchronously, the job events in order
-    // (so a marker job seen means every earlier job has been seen)
+    // onQueryStarted is delivered synchronously
     val runIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val queries = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         runIds.add(e.runId.toString)
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
-    val jobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
+    var microBatches = 0L
     spark.streams.addListener(queries)
-    sc.addSparkListener(jobs)
-    val microBatches = try {
-      val m = pipe.work(blobDir)
-      sc.setJobGroup("etljobs-marker", "etljobs-marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("etljobs-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      m
-    } finally { spark.streams.removeListener(queries); sc.removeSparkListener(jobs) }
-    assert(groups.contains("etljobs-marker"), "listener bus did not deliver the marker job")
+    val groups = try jobGroupsOf { microBatches = pipe.work(blobDir) }
+      finally spark.streams.removeListener(queries)
     val run = runIds.asScala.toSeq
-    val n = groups.asScala.count(run.contains)
+    val n = groups.count(run.contains)
     info(s"Spark jobs in one work micro-batch: $n")
     assert(microBatches === 1 && run.size === 1)
     assert(pipe.records.get.count() === 3)
     assert(n === WorkJobs, s"jobs in one work micro-batch: $n")
+  }
+
+  private def candidateRows(cands: (String, Int, String)*) = cands.map { case (id, pages, modified) =>
+    (id, s"NCA $id", s"$id.pdf", s"https://x/$id.pdf", 2024, pages, Option("c"), Option(modified))
+  }.toDF("id", "title", "filename", "url", "year", "page_count",
+    "file_meta_created_at", "file_meta_modified_at")
+
+  private def ncaRow(nca: String, agency: String, amount: String) =
+    Seq(nca, "Regular", "2024-01-15", "DepEd", agency, "OU1", amount, "P")
+
+  /** A store that has loaded A and B in one cycle, then C in a second.
+    * NCA-X was first released in A and re-released in C, so its record
+    * row names C and its allocations come from both releases' batches.
+    */
+  private def twoCycleStore(workDir: String): EtlPipeline = {
+    val blobDir = s"$workDir/blobs"
+    writeBlob(blobDir, "A.pdf", Seq(page(ncaRow("NCA-A1", "AgA", "10.00")),
+      page(ncaRow("NCA-X", "AgB", "20.00"))))
+    writeBlob(blobDir, "B.pdf", Seq(page(ncaRow("NCA-B1", "AgC", "30.00"))))
+    writeBlob(blobDir, "C.pdf", Seq(page(ncaRow("NCA-C1", "AgD", "40.00"),
+      Seq.fill(8)(""), ncaRow("NCA-X", "AgE", "50.00"))))
+    val pipe = new EtlPipeline(spark, workDir, batchSize = 1)
+    pipe.scrape(candidateRows(("A", 2, "m1"), ("B", 1, "m1")), Seq("A.pdf", "B.pdf").toDF("filename"))
+    pipe.orchestrate(); pipe.work(blobDir)
+    pipe.scrape(candidateRows(("A", 2, "m1"), ("B", 1, "m1"), ("C", 1, "m1")),
+      Seq("A.pdf", "B.pdf", "C.pdf").toDF("filename"))
+    pipe.orchestrate(); pipe.work(blobDir)
+    pipe
+  }
+
+  private def tableRows(path: String): Seq[org.apache.spark.sql.Row] =
+    TableStore.read(spark, path).fold(Seq.empty[org.apache.spark.sql.Row])(_.collect().toSeq)
+
+  test("the keyed record cascade removes exactly the changed releases' records and their allocations") {
+    val workDir = Files.createTempDirectory("etlcascade").toString
+    val pipe = twoCycleStore(workDir)
+    val records = tableRows(pipe.recordTable)
+    val allocations = tableRows(pipe.allocationTable)
+    assert(records.filter(_.getAs[String]("nca_number") == "NCA-X").map(_.getAs[String]("release_id"))
+      === Seq("C"))
+    assert(allocations.count(_.getAs[String]("nca_number") == "NCA-X") === 2)
+    copyTree(workDir, s"$workDir-crash")
+
+    // A changed, B's blob is missing (both cascade), C is unchanged
+    val candidates = candidateRows(("A", 2, "m2"), ("B", 1, "m1"), ("C", 1, "m1"))
+    val stored = Seq("A.pdf", "C.pdf").toDF("filename")
+    val changed = Set("A", "B")
+    val queued = pipe.scrape(candidates, stored)
+    assert(queued.select("id").as[String].collect().toSet === changed)
+    val kept = records.filterNot(r => changed(r.getAs[String]("release_id")))
+    val keptNcas = kept.map(_.getAs[String]("nca_number")).toSet
+    assert(keptNcas === Set("NCA-C1", "NCA-X"))
+    assert(tableRows(pipe.recordTable).toSet === kept.toSet)
+    assert(tableRows(pipe.allocationTable).sortBy(_.mkString("|"))
+      === allocations.filter(r => keptNcas(r.getAs[String]("nca_number"))).sortBy(_.mkString("|")))
+
+    // a crash after the allocation merge, before the record merge: the
+    // records are intact, so CDC re-classifies and the retry converges
+    val crashed = new EtlPipeline(spark, s"$workDir-crash", batchSize = 1)
+    val deadNcas = TableStore.read(spark, crashed.recordTable).get
+      .filter(col("release_id").isin(changed.toSeq: _*)).select("nca_number")
+    TableStore.deleteCascade(spark, deadNcas, "nca_number", parent = (crashed.allocationTable, "nca_number"))
+    assert(tableRows(crashed.recordTable).toSet === records.toSet)
+    assert(crashed.scrape(candidates, stored).select("id").as[String].collect().toSet === changed)
+    Seq(pipe.releaseTable -> crashed.releaseTable, pipe.recordTable -> crashed.recordTable,
+        pipe.allocationTable -> crashed.allocationTable).foreach { case (a, b) =>
+      assert(tableRows(b).map(_.mkString("|")).sorted === tableRows(a).map(_.mkString("|")).sorted, b)
+    }
+  }
+
+  /** Spark jobs one `scrape` runs over the store of "the keyed record
+    * cascade ...", with one changed, one missing-blob, one unchanged and
+    * one new release: 31 when each merge collected its touched buckets
+    * through a shuffle and the records were cascaded by `release_id`.
+    */
+  private val ScrapeJobs = 22
+
+  test("one scrape over a populated store runs a pinned number of Spark jobs") {
+    val workDir = Files.createTempDirectory("etlscrapejobs").toString
+    val pipe = twoCycleStore(workDir)
+    writeBlob(s"$workDir/blobs", "D.pdf", Seq(page(ncaRow("NCA-D1", "AgF", "60.00"))))
+    val candidates = candidateRows(("A", 2, "m2"), ("B", 1, "m1"), ("C", 1, "m1"), ("D", 1, "m1"))
+      .localCheckpoint(true)
+    val stored = Seq("A.pdf", "C.pdf", "D.pdf").toDF("filename").localCheckpoint(true)
+    var queued: org.apache.spark.sql.DataFrame = null
+    val sc = spark.sparkContext
+    val n = jobGroupsOf {
+      sc.setJobGroup("etl-scrape", "etl-scrape")
+      try queued = pipe.scrape(candidates, stored) finally sc.clearJobGroup()
+    }.count(_ == "etl-scrape")
+    info(s"Spark jobs in one scrape: $n")
+    assert(queued.select("id").as[String].collect().toSet === Set("A", "B", "D"))
+    assert(n === ScrapeJobs, s"jobs in one scrape: $n")
   }
 
   test("a batch whose header lacks a valid column quarantines; the other batches load") {

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +25,16 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Copy the directory tree at `from` to `to`, e.g. to replay a store. */
+  protected def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.toList.foreach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally walk.close()
+  }
 
   override def afterAll(): Unit = {
     // keep the session alive for sibling suites in the same JVM

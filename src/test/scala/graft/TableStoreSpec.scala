@@ -182,15 +182,6 @@ class TableStoreSpec extends SparkSpecBase {
   }
   private val batch = Seq((7, "NEW"), (300, "x")).toDF("k", "v")
 
-  private def copyTree(from: String, to: String): Unit = {
-    val src = new File(from).toPath
-    val walk = Files.walk(src)
-    try walk.iterator().asScala.toList.foreach { p =>
-      val dst = new File(to).toPath.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
-    } finally walk.close()
-  }
-
   /** After recovery, only the manifest and the files it names are left. */
   private def assertOnlyNamed(dir: String): Unit =
     assert(tableFileState(dir).keySet === named(dir) + "_manifest")
@@ -318,5 +309,58 @@ class TableStoreSpec extends SparkSpecBase {
       assert(groups.contains("ts-probe"))
       assert(!groups.contains("ts-read"))
     } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("a merge with duplicated removal keys leaves the same rows as one with distinct keys") {
+    val base = Files.createTempDirectory("tsdup").toString
+    val all = (1 to 300).map(i => (i, s"v$i", s"batch${i % 7}")).toDF("k", "v", "batch")
+    def state(keys: Seq[Int], batches: Seq[String]): Set[(Int, String, String)] = {
+      val dir = s"$base/${keys.size}"
+      TableStore.merge(dir, "k", remove = None, add = Some(all))
+      // the duplicates spread over several partitions
+      TableStore.merge(dir, "k", remove = Some("k" -> keys.toDF("k").repartition(3)), add = None)
+      TableStore.merge(dir, "k", remove = Some("batch" -> batches.toDF("batch").repartition(3)),
+        add = Some(Seq((2, "new", "batch2")).toDF("k", "v", "batch")))
+      TableStore.read(spark, dir).get.as[(Int, String, String)].collect().toSet
+    }
+    val distinct = state(Seq(5, 42, 250), Seq("batch2", "batch3"))
+    assert(distinct === all.as[(Int, String, String)].collect().toSet
+      .filterNot(r => Set(5, 42, 250)(r._1) || Set("batch2", "batch3")(r._3)) + ((2, "new", "batch2")))
+    assert(state(Seq.fill(4)(Seq(5, 42, 250)).flatten, Seq.fill(5)(Seq("batch2", "batch3")).flatten) === distinct)
+  }
+
+  test("a merge and an enqueue start no child process for their files, and keep the local filesystem's modes") {
+    import java.nio.file.attribute.PosixFilePermissions.{toString => mode}
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import graft.streaming.QueuePipeline
+    val base = Files.createTempDirectory("tsfork").toRealPath().toString
+    val batch = (1 to 100).map(i => (i, s"v$i")).toDF("k", "v")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      TableStore.upsert(batch, s"$base/t", "k")
+      TableStore.merge(s"$base/t", "k", remove = Some("v" -> Seq("v7").toDF("v")), add = None)
+      QueuePipeline.enqueue(batch, s"$base/q")
+    } finally rec.stop()
+    val jfr = Files.createTempFile("tsfork", ".jfr")
+    try rec.dump(jfr) finally rec.close()
+    // only forks naming this test's files: an earlier suite's sessions may
+    // still be cleaned up (an `rm -rf` of their artifact dirs) meanwhile
+    val forks = RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command")).filter(_.contains(base)).toSeq
+    assert(forks.isEmpty, s"${forks.size} child processes, e.g. ${forks.take(3).mkString("; ")}")
+
+    // a plain write through the session's default local filesystem
+    batch.write.parquet(s"$base/default")
+    def modeOf(f: File): String = mode(Files.getPosixFilePermissions(f.toPath))
+    val fileMode = modeOf(new File(s"$base/default").listFiles().filter(_.getName.endsWith(".parquet")).head)
+    val dirMode = modeOf(new File(s"$base/default"))
+    val buckets = new File(s"$base/t").listFiles().filter(_.isDirectory)
+    assert(buckets.length === 16)
+    buckets.foreach(d => assert(modeOf(d) === dirMode, d))
+    (buckets.flatMap(_.listFiles()) ++ new File(s"$base/q").listFiles().filter(_.getName.startsWith("part-")))
+      .foreach(f => assert(modeOf(f) === fileMode, f))
+    assert(modeOf(new File(s"$base/q")) === dirMode)
   }
 }
